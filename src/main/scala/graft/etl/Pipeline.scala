@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The customs-analytics pipeline (SURVEY.md §3 E1): the reference's
@@ -12,10 +13,13 @@ import org.apache.spark.sql.functions._
   * double — sentinels only at export), remark (provenance), new/used,
   * unit weight in ton, capacity/type intervals, outliers, cny amounts.
   *
-  * Every stage is a pure `DataFrame => DataFrame`; Catalyst sees the whole
+  * Every stage is a pure `DataFrame => DataFrame` that sets its columns in
+  * one projection per dependency level (`Project`); Catalyst sees the whole
   * tree, so filters push to the scan and all dimension joins broadcast.
-  * Shuffles: only the outlier median groupBy+join — everything else is
-  * map-side.
+  * Shuffles: the two window aggregates, backward tagging over (brand, type)
+  * and the outlier median over (brand, model) — everything else is
+  * map-side. A window puts a whole group in one task, so a heavy-hitter
+  * brand (SANY, ≈17% of rows) is sorted by a single task.
   */
 object Pipeline {
 
@@ -41,30 +45,35 @@ object Pipeline {
 
   /** Stage 1 (cells 5-13): stable row id, normalized text columns, numeric
     * coercions, low-amount filter, derived unit metrics. */
-  def prepare(df: DataFrame): DataFrame =
-    df.withColumn("__row_id", monotonically_increasing_id())
+  def prepare(df: DataFrame): DataFrame = {
+    val typed = Project(df)(
+      "__row_id" -> monotonically_increasing_id(),
       // lenient like pd.to_datetime: accept ISO or slash dates, null otherwise
-      .withColumn("date", coalesce(
+      "date" -> coalesce(
         try_to_timestamp(c("date")),
         try_to_timestamp(c("date"), lit("yyyy/MM/dd")),
-        try_to_timestamp(c("date"), lit("MM/dd/yyyy"))))
-      .withColumn("qty", expr("try_cast(qty AS DOUBLE)"))
-      .withColumn("amount in usd", expr("try_cast(`amount in usd` AS DOUBLE)"))
-      .withColumn("weight in kg", expr("try_cast(`weight in kg` AS DOUBLE)"))
+        try_to_timestamp(c("date"), lit("MM/dd/yyyy"))),
+      "qty" -> expr("try_cast(qty AS DOUBLE)"),
+      "amount in usd" -> expr("try_cast(`amount in usd` AS DOUBLE)"),
+      "weight in kg" -> expr("try_cast(`weight in kg` AS DOUBLE)"))
       .filter(c("amount in usd") >= 10000)
-      .withColumn("price in usd", c("amount in usd") / c("qty"))
+    // try_divide: a zero qty gives a null price like an unparseable one
+    // (the price filter drops the row); ANSI `/` would fail the batch
+    val priced = Project(typed)(
+      "price in usd" -> try_divide(c("amount in usd"), c("qty")),
+      "unit weight in ton" -> try_divide(c("weight in kg"), c("qty")) / 1000)
       .filter(c("price in usd") >= 10000)
-      .withColumn("unit weight in ton", c("weight in kg") / c("qty") / 1000)
-      // preProcess already collapses+trims whitespace; a second collapseWs
-      // would be a no-op regex pass over every row (measured on q40)
-      // explicit null semantics: a null description becomes '' (like
-      // supplier below), so downstream stages are total — the row survives
-      // dropIrrelevant, matches nothing, and lands in remark = "No match"
-      .withColumn("description2",
-        Normalize.preProcess(
-          Normalize.applyAliases(upper(coalesce(c("product description"), lit(""))),
-            Normalize.customsAliases)))
-      .withColumn("supplier_norm", supplierNorm(c("supplier")))
+    // preProcess already collapses+trims whitespace; a second collapseWs
+    // would be a no-op regex pass over every row (measured on q40)
+    // explicit null semantics: a null description becomes '' (like
+    // supplier below), so downstream stages are total — the row survives
+    // dropIrrelevant, matches nothing, and lands in remark = "No match"
+    Project(priced)(
+      "description2" -> Normalize.preProcess(
+        Normalize.applyAliases(upper(coalesce(c("product description"), lit(""))),
+          Normalize.customsAliases)),
+      "supplier_norm" -> supplierNorm(c("supplier")))
+  }
 
   /** Normalized supplier text for brand matching — shared by `prepare` and
     * Matching.rematchIndividual (which re-derives the column when a
@@ -94,24 +103,21 @@ object Pipeline {
           ((r.getString(1), Option(r.get(3)).map(_.toString.toDouble),
             r.getString(4), Option(r.get(5)).map(_.toString.toDouble)))
       }.toMap
-    df.withColumn("brand",
+    val matched = df.withColumn("brand",
         Matching.firstMatchAuto(Seq(c("description2"), col("supplier_norm")), brandOrder))
       .withColumn("__model_ref",
         Matching.literalKeyedLongestMatch(col("brand"), c("description2"), modelsByBrand))
       .withColumn("__info",
         try_element_at(typedLit(infoByKey), concat_ws("|", col("brand"), col("__model_ref"))))
-      .withColumn("remark",
-        when(col("brand").isNull, Remark.noMatch)
-          .when(col("__model_ref").isNull, Remark.brandNoModel)
-          .otherwise(Remark.fully))
-      .withColumn("model", col("__info._1"))
-      .withColumn("capacity", col("__info._2"))
-      .withColumn("type", col("__info._3"))
-      .withColumn("hp", col("__info._4"))
-      .withColumn("brand", coalesce(col("brand"), lit(UNK)))
-      .withColumn("model", coalesce(col("model"), lit(UNK)))
-      .withColumn("type", coalesce(col("type"), lit(UNK)))
-      .drop("__model_ref", "__info")
+    Project(matched, "__model_ref", "__info")(
+      "brand" -> coalesce(col("brand"), lit(UNK)),
+      "remark" -> when(col("brand").isNull, Remark.noMatch)
+        .when(col("__model_ref").isNull, Remark.brandNoModel)
+        .otherwise(Remark.fully),
+      "model" -> coalesce(col("__info._1"), lit(UNK)),
+      "capacity" -> col("__info._2"),
+      "type" -> coalesce(col("__info._3"), lit(UNK)),
+      "hp" -> col("__info._4"))
   }
 
   /** Relational variant of stage 2 for KBs too large to collect: broadcast
@@ -132,14 +138,13 @@ object Pipeline {
       "model_ref",
       Map("model" -> "model", "kb_capacity" -> "capacity",
         "kb_type" -> "type", "kb_hp" -> "hp"))
-    withModel
-      .withColumn("remark",
-        when(col("brand").isNull, Remark.noMatch)
-          .when(col("model").isNull, Remark.brandNoModel)
-          .otherwise(Remark.fully))
-      .withColumn("brand", coalesce(col("brand"), lit(UNK)))
-      .withColumn("model", coalesce(col("model"), lit(UNK)))
-      .withColumn("type", coalesce(col("type"), lit(UNK)))
+    Project(withModel)(
+      "remark" -> when(col("brand").isNull, Remark.noMatch)
+        .when(col("model").isNull, Remark.brandNoModel)
+        .otherwise(Remark.fully),
+      "brand" -> coalesce(col("brand"), lit(UNK)),
+      "model" -> coalesce(col("model"), lit(UNK)),
+      "type" -> coalesce(col("type"), lit(UNK)))
   }
 
   /** Irrelevant-keyword vocabulary (P3, py:119-125 — excerpt of the 32). */
@@ -214,23 +219,20 @@ object Pipeline {
         when(ord === i, get(regexp_extract_all(c("description2"), lit(capReg), lit(1)), lit(0)))
           .otherwise(acc)
     }
-    df.withColumn("__rx", when(todoCond, best))
-      .withColumn("remark",
-        when(col("__rx").isNull, col("remark"))
-          .when(col("brand") === UNK && col("__rx.n_matched") === 1, Remark.noBrandUniqueRegex)
-          .when(col("brand") === UNK, Remark.noBrandLongestRegex)
-          .when(col("__rx.n_matched") === 1, Remark.uniqueRegex)
-          .otherwise(Remark.longestRegex))
-      .withColumn("model",
-        when(col("__rx").isNotNull, Normalize.stripSpaces(matched)).otherwise(col("model")))
-      .withColumn("capacity",
-        when(col("__rx").isNotNull && col("capacity").isNull,
-          RegexMatch.decodeCapacity(rxCapNum, rxSp, compat)).otherwise(col("capacity")))
-      .withColumn("type",
-        when(col("__rx").isNotNull && col("type") === UNK, rxCategory).otherwise(col("type")))
-      .withColumn("brand",
+    Project(df.withColumn("__rx", when(todoCond, best)), "__rx")(
+      "remark" -> when(col("__rx").isNull, col("remark"))
+        .when(col("brand") === UNK && col("__rx.n_matched") === 1, Remark.noBrandUniqueRegex)
+        .when(col("brand") === UNK, Remark.noBrandLongestRegex)
+        .when(col("__rx.n_matched") === 1, Remark.uniqueRegex)
+        .otherwise(Remark.longestRegex),
+      "model" ->
+        when(col("__rx").isNotNull, Normalize.stripSpaces(matched)).otherwise(col("model")),
+      "capacity" -> when(col("__rx").isNotNull && col("capacity").isNull,
+        RegexMatch.decodeCapacity(rxCapNum, rxSp, compat)).otherwise(col("capacity")),
+      "type" ->
+        when(col("__rx").isNotNull && col("type") === UNK, rxCategory).otherwise(col("type")),
+      "brand" ->
         when(col("__rx").isNotNull && col("brand") === UNK, rxBrand).otherwise(col("brand")))
-      .drop("__rx")
   }
 
   /** Relational variant of stage 7 for pattern tables too large to
@@ -247,31 +249,23 @@ object Pipeline {
       dim, "model_regex", scope, Some("rx_priority"),
       Map("rx_brand" -> "rx_brand", "category" -> "rx_category",
         "capacity_regex" -> "rx_capreg", "starting_point" -> "rx_sp"))
-    val decoded = matched
-      .withColumn("rx_capnum",
-        when(col("matched").isNotNull,
-          get(regexp_extract_all(c("description2"), col("rx_capreg"), lit(1)), lit(0))))
-      .withColumn("rx_capacity",
+    val decoded = matched.withColumn("rx_capnum",
+      when(col("matched").isNotNull,
+        get(regexp_extract_all(c("description2"), col("rx_capreg"), lit(1)), lit(0))))
+    val applied = Project(decoded,
+        "matched", "rx_brand", "rx_category", "rx_capreg", "rx_sp", "rx_capnum")(
+      "remark" -> when(col("matched").isNull, col("remark"))
+        .when(col("brand") === UNK, Remark.noBrandLongestRegex)
+        .otherwise(Remark.longestRegex),
+      "model" -> when(col("matched").isNotNull, Normalize.stripSpaces(col("matched")))
+        .otherwise(col("model")),
+      "brand" -> when(col("matched").isNotNull && col("brand") === UNK, col("rx_brand"))
+        .otherwise(col("brand")),
+      "type" -> when(col("matched").isNotNull && col("type") === UNK, col("rx_category"))
+        .otherwise(col("type")),
+      "capacity" -> when(col("matched").isNotNull && col("capacity").isNull,
         RegexMatch.decodeCapacity(col("rx_capnum"), col("rx_sp"), compat))
-    val applied = decoded
-      .withColumn("remark",
-        when(col("matched").isNull, col("remark"))
-          .when(col("brand") === UNK, Remark.noBrandLongestRegex)
-          .otherwise(Remark.longestRegex))
-      .withColumn("model",
-        when(col("matched").isNotNull, Normalize.stripSpaces(col("matched")))
-          .otherwise(col("model")))
-      .withColumn("brand",
-        when(col("matched").isNotNull && col("brand") === UNK, col("rx_brand"))
-          .otherwise(col("brand")))
-      .withColumn("type",
-        when(col("matched").isNotNull && col("type") === UNK, col("rx_category"))
-          .otherwise(col("type")))
-      .withColumn("capacity",
-        when(col("matched").isNotNull && col("capacity").isNull, col("rx_capacity"))
-          .otherwise(col("capacity")))
-      .drop("matched", "rx_brand", "rx_category", "rx_capreg", "rx_sp",
-        "rx_capnum", "rx_capacity")
+        .otherwise(col("capacity")))
     done.unionByName(applied)
   }
 
@@ -280,35 +274,32 @@ object Pipeline {
   def searchCapacity(df: DataFrame): DataFrame = {
     val cap = Enrich.extractDouble(c("description2"),
       "\\b(\\d+(?:\\.\\d+)?)\\s*(?:METRIC\\s*)?TONS?\\b")
-    df.withColumn("remark",
-        when(col("capacity").isNull && cap.isNotNull, Remark.capacityInDesc)
-          .otherwise(col("remark")))
-      .withColumn("capacity",
-        when(col("capacity").isNull, cap).otherwise(col("capacity")))
+    Project(df)(
+      "remark" -> when(col("capacity").isNull && cap.isNotNull, Remark.capacityInDesc)
+        .otherwise(col("remark")),
+      "capacity" -> coalesce(col("capacity"), cap))
   }
 
   /** Stage 9 (J6, py:255-276): backward tagging — rows with known
     * (brand, type, capacity) but UNKNOWN model borrow the model of a
-    * labeled row of the same brand+type with capacity within ±5%. */
+    * labeled row of the same brand+type with capacity within ±5%
+    * (inclusive); among several, the smallest model name wins.
+    *
+    * One window aggregate over (brand, type) collects the group's labeled
+    * (capacity, model) pairs; no self-join, so the input is read once and
+    * needs no cut. A null type never matches, as in the band-join form. */
   def backwardTag(df: DataFrame): DataFrame = {
-    val known = df
-      .filter(col("model") =!= UNK && col("capacity").isNotNull)
-      .select(col("brand").as("bt_brand"), col("type").as("bt_type"),
-        col("capacity").as("bt_capacity"), col("model").as("bt_model"))
-      .distinct()
-    val todo = df.filter(
-      col("model") === UNK && col("brand") =!= UNK && col("capacity").isNotNull)
-    val done = df.filter(
-      !(col("model") === UNK && col("brand") =!= UNK && col("capacity").isNotNull))
-    val tagged = Matching.bestMatchJoin(todo, Seq("__row_id"), known,
-      col("brand") === col("bt_brand") && col("type") === col("bt_type") &&
-        col("bt_capacity").between(col("capacity") * 0.95, col("capacity") * 1.05),
-      Seq(col("bt_model").asc_nulls_last), Map("bt_model" -> "bt_model"))
-      .withColumn("remark",
-        when(col("bt_model").isNotNull, Remark.inferredModel).otherwise(col("remark")))
-      .withColumn("model", coalesce(col("bt_model"), col("model")))
-      .drop("bt_model")
-    done.unionByName(tagged)
+    val todo = col("model") === UNK && col("brand") =!= UNK &&
+      col("capacity").isNotNull && col("type").isNotNull
+    val cands = collect_set(when(col("model") =!= UNK && col("capacity").isNotNull,
+        struct(col("capacity").as("c"), col("model").as("m"))))
+      .over(Window.partitionBy("brand", "type"))
+    val inBand = (x: Column) => x("c").between(col("capacity") * 0.95, col("capacity") * 1.05)
+    val tagged = df.withColumn("__bt",
+      when(todo, array_min(transform(filter(cands, inBand), x => x("m")))))
+    Project(tagged, "__bt")(
+      "remark" -> when(col("__bt").isNotNull, Remark.inferredModel).otherwise(col("remark")),
+      "model" -> coalesce(col("__bt"), col("model")))
   }
 
   /** Stage 10 (A2, py:287-316): ±20% of same-(brand, model) median price;
@@ -322,8 +313,9 @@ object Pipeline {
   def markIntervals(df: DataFrame, loadInterval: Int = 10): DataFrame = {
     val basis = when(col("capacity").isNotNull && col("capacity") > 0, col("capacity"))
       .otherwise(c("unit weight in ton"))
-    df.withColumn("capacity interval", Enrich.dynamicBuckets(basis, loadInterval))
-      .withColumn("type interval", Enrich.fixedBuckets(basis))
+    Project(df)(
+      "capacity interval" -> Enrich.dynamicBuckets(basis, loadInterval),
+      "type interval" -> Enrich.fixedBuckets(basis))
   }
 
   /** Stage 12 (J5, py:320-340): USD→CNY per (year, month) of `date`. */
@@ -334,15 +326,17 @@ object Pipeline {
   /** Stage 13 (F5 + P6, cells 57/60): model whitespace cleanup + sentinel
     * rendering for export (capacity stays a nullable double internally). */
   def finalize(df: DataFrame): DataFrame =
-    df.withColumn("model", Normalize.stripSpaces(col("model")))
-      .withColumn("datasource", coalesce(c("datasource"), lit("pipeline")))
-      .drop("supplier_norm", "__row_id")
+    Project(df, "supplier_norm", "__row_id")(
+      "model" -> Normalize.stripSpaces(col("model")),
+      "datasource" -> coalesce(c("datasource"), lit("pipeline")))
 
-  /** Cut the lineage before a stage that BRANCHES on its input
-    * (backward tagging reads the df three ways, the outlier pass twice)
-    * or that would push a filter back through the expensive normalize
-    * projections. Without a cut every branch re-executes the whole
-    * upstream plan, growing multiplicatively per branching stage.
+  /** Cut the lineage after the match block, the pipeline's one cut: it
+    * keeps the optimizer from pushing later filters back through the
+    * expensive normalize and match projections, and splits the plan each
+    * action analyses and optimizes in two. The later stages need no cut,
+    * as none reads its input twice (the window aggregates do not branch).
+    * The cut is lazy (`eager = false`) and the match block has no
+    * exchange, so building the pipeline starts no job.
     *
     * `localCheckpoint` stores raw rows in the block manager — for this
     * wide stringy schema ~10× cheaper than `persist`'s columnar
@@ -360,7 +354,7 @@ object Pipeline {
       .withColumn("datasource", lit("pipeline"))
       .transform(matchKnowledgeBase(_, modelKb))
       // supplier_norm exists only for brand matching — drop it BEFORE the
-      // first cut so it isn't materialized (and re-read) three times
+      // cut so it isn't materialized
       .transform(_.drop("supplier_norm"))
       .transform(materialize)             // codegen cut: match block
       .transform(dropIrrelevant)
@@ -370,9 +364,7 @@ object Pipeline {
       .transform(regexPass(_, regexKb, compat))
       .transform(searchCapacity)
       .transform(Lookups.refineCraneType) // B5: >300T crawler → lattice boom
-      .transform(materialize)             // branch point: backwardTag
       .transform(backwardTag)
-      .transform(materialize)             // branch point: outlier median
       .transform(markOutliers)
       .transform(intervals)
       .transform(convertCurrency(_, rates))
@@ -387,8 +379,9 @@ object Pipeline {
     * weight fallback — with `<wT` + w-wide bands; the fixed working-
     * scenario buckets also read capacity alone. */
   def markIntervalsCrane(df: DataFrame, loadInterval: Int = 50): DataFrame =
-    df.withColumn("capacity interval", Enrich.craneBuckets(col("capacity"), loadInterval))
-      .withColumn("type interval", Enrich.fixedBuckets(col("capacity")))
+    Project(df)(
+      "capacity interval" -> Enrich.craneBuckets(col("capacity"), loadInterval),
+      "type interval" -> Enrich.fixedBuckets(col("capacity")))
 
   /** E2 (crane) entry point (SURVEY §3; reference cells 37/51-52/73):
     * the same 13 stages with crane interval rules and an optional EN↔CN

@@ -25,9 +25,9 @@ object Rates {
     val joined = df.join(broadcast(rates),
       year(col(dateCol)) === col("__ry") && month(col(dateCol)) === col("__rm"),
       "left")
-    cols.foldLeft(joined) { case (acc, (src, dst)) =>
+    Project(joined, "__ry", "__rm", "__rate")(cols.map { case (src, dst) =>
       val v = col(src) * col("__rate")
-      acc.withColumn(dst, roundTo.map(round(v, _)).getOrElse(v))
-    }.drop("__ry", "__rm", "__rate")
+      dst -> roundTo.map(round(v, _)).getOrElse(v)
+    }: _*)
   }
 }

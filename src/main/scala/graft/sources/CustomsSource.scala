@@ -44,9 +44,16 @@ object CustomsSource {
   /** S2/S3: history sink — append-mode Parquet partitioned by month of
     * `date`, so each monthly batch lands in its own partition and readers
     * prune by month. This is the 100TB shape of the reference's
-    * "concat + rewrite the whole xlsx" history update. */
+    * "concat + rewrite the whole xlsx" history update.
+    *
+    * Rows are hash-partitioned by month before the write, so an append
+    * writes one file per month whatever its input's partitioning. The
+    * pipeline's output is clustered by its last window keys (brand,
+    * model); written as it comes, every task would add a file to every
+    * month it holds rows of, and readers would open that many more. */
   def appendToHistory(df: DataFrame, path: String): Unit =
     df.withColumn("__ym", date_format(col("date"), "yyyyMM"))
+      .repartition(col("__ym"))
       .write.mode("append").partitionBy("__ym").parquet(path)
 
   def readHistory(spark: SparkSession, path: String): DataFrame =

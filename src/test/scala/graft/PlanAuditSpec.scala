@@ -17,15 +17,16 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dimension joins broadcast — no sort-merge join anywhere in the registry's hot joins") {
-    // (q40/q68's outlier join-back shows a static SortMergeJoin that AQE
-    // converts to broadcast at runtime — audited separately, not listed)
     Seq("q08_fx_join", "q36_key_players", "q19_topk", "q45_embed_dedup",
       "q69_term_outliers").foreach { q =>
       val p = plan(q)
       assert(!p.contains("SortMergeJoin"), s"$q degraded to SortMergeJoin")
     }
     assert(plan("q08_fx_join").contains("BroadcastHashJoin"))
-    assert(plan("q69_term_outliers").contains("BroadcastHashJoin"))
+    // outlier medians are window aggregates: no join-back at all
+    val q69 = plan("q69_term_outliers")
+    assert(q69.contains("Window") && !q69.contains("Join"),
+      "q69 medians are not window aggregates:\n" + q69.take(1200))
   }
 
   test("the as-of join is one exchange + one window, no join node") {

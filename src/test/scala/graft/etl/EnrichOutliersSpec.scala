@@ -33,14 +33,27 @@ class EnrichOutliersSpec extends SparkSpec {
 
   test("markOutliers: trichotomy and ±20% rule") {
     // group g: values 100 (x3) → median 100; 130 is yes-high; 80 is yes-low(≤0.8×100)
+    // null key: a group of its own by value, but a join never matches it → unknown
     val df = Seq(("g", 100.0, false), ("g", 100.0, false), ("g", 100.0, false),
       ("g", 130.0, false), ("g", 80.0, false), ("g", 101.0, false),
-      ("h", 55.0, true)).toDF("k", "v", "unk")
+      ("h", 55.0, true), (null, 60.0, false), (null, 200.0, false)).toDF("k", "v", "unk")
     val got = Outliers.markOutliers(df, "v", Seq("k"), $"unk" === true)
       .select("v", "outliers").as[(Double, String)].collect().toSet
     assert(got.contains((130.0, "yes")) && got.contains((80.0, "yes")))
     assert(got.contains((101.0, "no")) && got.contains((100.0, "no")))
     assert(got.contains((55.0, "unknown")))
+    assert(got.contains((60.0, "unknown")) && got.contains((200.0, "unknown")))
+  }
+
+  test("markOutliers keeps the left-join column order: keys first, flag last") {
+    val df = Seq((1.0, "g", "x")).toDF("v", "k", "other")
+    assert(Outliers.markOutliers(df, "v", Seq("k"), lit(false)).columns.toSeq ==
+      Seq("k", "v", "other", "outliers"))
+    val term = Seq((1.0, "g", 2020)).toDF("v", "k", "term")
+    Seq(CompatFlags.intent, CompatFlags.bugCompatible).foreach { compat =>
+      assert(Outliers.markOutliersTerm(term, "v", Seq("k"), "term", lit(false),
+        compat = compat).columns.toSeq == Seq("k", "term", "v", "outliers"))
+    }
   }
 
   test("markOutliersTerm: §2.12-4 bug flag switches only the lower bound's scope") {
@@ -48,15 +61,23 @@ class EnrichOutliersSpec extends SparkSpec {
     // (term med 300); all-terms med 150. Row (2021, 200):
     //   intent: 200 ≤ 0.8·300 = 240 → yes (term-scoped lower bound)
     //   bug:    lower bound vs 0.8·150 = 120 → 200 is not below → no
-    val df = Seq(("g", 2020, 100.0), ("g", 2020, 100.0), ("g", 2020, 100.0),
-      ("g", 2021, 200.0), ("g", 2021, 300.0), ("g", 2021, 400.0))
-      .toDF("k", "term", "v")
+    // null key or null term rows are unknown under both settings
+    val df = Seq[(String, Option[Int], Double)](("g", Some(2020), 100.0),
+      ("g", Some(2020), 100.0), ("g", Some(2020), 100.0), ("g", Some(2021), 200.0),
+      ("g", Some(2021), 300.0), ("g", Some(2021), 400.0), ("g", None, 150.0),
+      (null, Some(2021), 300.0)).toDF("k", "term", "v")
     def run(compat: CompatFlags) =
       Outliers.markOutliersTerm(df, "v", Seq("k"), "term", lit(false), compat = compat)
-        .filter($"term" === 2021 && $"v" === 200.0)
-        .select($"outliers").as[String].head()
-    assert(run(CompatFlags.intent) == "yes")
-    assert(run(CompatFlags.bugCompatible) == "no")
+    def flag(compat: CompatFlags) = run(compat)
+      .filter($"term" === 2021 && $"v" === 200.0)
+      .select($"outliers").as[String].head()
+    assert(flag(CompatFlags.intent) == "yes")
+    assert(flag(CompatFlags.bugCompatible) == "no")
+    Seq(CompatFlags.intent, CompatFlags.bugCompatible).foreach { compat =>
+      val nullKeyed = run(compat).filter($"k".isNull || $"term".isNull)
+        .select($"outliers").as[String].collect()
+      assert(nullKeyed.toSeq == Seq("unknown", "unknown"))
+    }
   }
 
   test("markOutliers matches pandas-style interpolated median") {

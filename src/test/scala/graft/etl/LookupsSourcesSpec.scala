@@ -65,4 +65,17 @@ class LookupsSourcesSpec extends SparkSpec {
     assert(new java.io.File(s"$hist/__ym=202405").exists())
     assert(new java.io.File(s"$hist/__ym=202406").exists())
   }
+
+  test("history append writes one file per month whatever the input partitioning") {
+    val hist = java.nio.file.Files.createTempDirectory("graft_hist").toString
+    // three months, each spread over all four input partitions
+    val df = (0 until 40).map(i => (i, s"2024-0${3 + i % 3}-15 00:00:00")).toDF("id", "d")
+      .select($"id", to_timestamp($"d").as("date")).repartition(4, $"id")
+    assert(df.rdd.getNumPartitions == 4)
+    CustomsSource.appendToHistory(df, hist)
+    val parts = new java.io.File(hist).listFiles().filter(_.getName.startsWith("__ym="))
+    assert(parts.map(_.getName).sorted.toSeq == Seq("__ym=202403", "__ym=202404", "__ym=202405"))
+    parts.foreach(p => assert(p.list().count(_.endsWith(".parquet")) == 1, p.getName))
+    assert(CustomsSource.readHistory(spark, hist).count() == 40)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -127,6 +129,51 @@ class PipelineSpec extends SparkSpec {
       .filter($"`declaration number`" === "r2")
       .select($"brand").as[String].head()
     assert(viaSupplier == "XCMG")
+  }
+
+  test("a zero qty drops only its own row; the batch still runs (ANSI division)") {
+    // qty arrives as text from the CSV reader; a zero parses, unlike "n/a"
+    val zero = Seq(factRow("r11", "KOMATSU PC200-8 EXCAVATOR", "MOKAC CO", 120000, 0,
+        20000, "2024/05/11"))
+      .toDF(fact.columns: _*)
+    val batch = fact.union(zero).withColumn("qty", $"qty".cast("string"))
+    val ids = Pipeline.run(batch, KnowledgeBase.sampleModelKb(spark),
+        KnowledgeBase.sampleRegexKb(spark), KnowledgeBase.sampleRates(spark))
+      .select($"`declaration number`").as[String].collect()
+    assert(ids.sorted.toSeq == out.select($"`declaration number`").as[String].collect()
+      .sorted.toSeq)
+    assert(!ids.contains("r11"))
+  }
+
+  test("run and runCrane start no job before an action and cut the lineage once") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (kb, rx, rates) = (KnowledgeBase.sampleModelKb(spark),
+        KnowledgeBase.sampleRegexKb(spark), KnowledgeBase.sampleRates(spark))
+      val translations = Seq(("CRAWLER CRANE", "履带起重机")).toDF("key", "translated")
+      sc.setJobGroup("construct", "pipeline construction")
+      val built = try Seq(Pipeline.run(fact, kb, rx, rates),
+          Pipeline.runCrane(fact, kb, rx, rates, Some(translations)))
+        finally sc.clearJobGroup()
+      // listener events arrive in order: once this job is seen, every job
+      // started during construction has been seen too
+      sc.setJobGroup("fence", "fence")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("fence"))
+      assert(!groups.contains("construct"), s"jobs started: ${groups.toArray.toSeq}")
+      built.foreach { df =>
+        val cuts = df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }
+        assert(cuts.size == 1)
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("output schema carries the §1.3 enrichment columns") {

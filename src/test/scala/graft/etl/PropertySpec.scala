@@ -104,7 +104,7 @@ class PropertySpec extends SparkSpec {
 
   test("property: outlier flags are a trichotomy and 'unknown' only when marked") {
     val gen = for {
-      k <- Gen.oneOf("a", "b", "c")
+      k <- Gen.oneOf[String]("a", "b", "c", null)
       v <- Gen.chooseNum(1.0, 1000.0)
       unk <- Gen.oneOf(true, false)
     } yield (k, v, unk)
@@ -112,6 +112,11 @@ class PropertySpec extends SparkSpec {
     val out = Outliers.markOutliers(df, "v", Seq("k"), $"unk" === true)
     assert(out.filter(!$"outliers".isin("yes", "no", "unknown")).count() == 0)
     assert(out.filter($"unk" === true && $"outliers" =!= "unknown").count() == 0)
+    // a null key never matches a median: its rows stay unknown
+    assert(out.filter($"k".isNull).count() > 0)
+    assert(out.filter($"k".isNull && $"outliers" =!= "unknown").count() == 0)
+    assert(out.filter($"k".isNotNull && $"unk" === false && $"outliers" === "unknown")
+      .count() == 0)
   }
 
   test("property: longest containment match is always >= any other match length") {

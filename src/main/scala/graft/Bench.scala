@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Small fixed subset printed inline in the stdout JSON line so the
     * driver's `queries` schema stays populated without the line growing
@@ -15,26 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Whole-stage-codegen compilation cache: Spark's default (100
-      // entries) is sized for a handful of repeated queries; a 488-query
-      // registry generates thousands of distinct codegen units, so every
-      // pass evicts and Janino-recompiles the lot. Scale-neutral (the
-      // cache is per-JVM source-keyed compilation, identical benefit on
-      // any cluster executor); env-overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
-    // ERROR, not WARN: cache/checkpoint WARN spam after the JSON line is
-    // exactly what pushed round-5's artifact out of the driver's ~2 KB
-    // stdout tail window
-    spark.sparkContext.setLogLevel("ERROR")
-    LogHygiene.suppressAccumulatorReleaseNoise()
+    val spark = Session.build(Session.cpus(4))
     // Optional shard "i/n" (e.g. "0/4"): time only every n-th query by
     // sorted index — lets ad-hoc sweeps at bigger SFs run in bounded
     // chunks. The driver never sets it, so the official artifact always

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit probe (PerfProbe's sibling): prints whether a registry
   * query's physical plan contains a BroadcastNestedLoopJoin or
   * CartesianProduct, plus its join lines — the quick scale-hygiene
@@ -12,11 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(4)
     val df = SparkEntry.queries(args(0))(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     println("NESTEDLOOP=" + plan.contains("BroadcastNestedLoopJoin"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-shaped multi-pass runner with block-manager/GC instrumentation —
   * built to root-cause the round-9 official-artifact bimodality (q398
   * median 13.5 s vs 7.3 s steady; q68/q103 wildly bimodal across passes,
@@ -16,19 +14,11 @@ import org.apache.spark.sql.SparkSession
 object PerfDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = args.headOption.map(_.toInt).getOrElse(3)
     val watch = sys.env.getOrElse("SPARK_GRAFT_DIAG_WATCH",
       "q398_bleu,q68_crane_pipeline,q103_pagerank").split(",").toSet
     val clean = sys.env.get("SPARK_GRAFT_DIAG_CLEAN").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    LogHygiene.suppressAccumulatorReleaseNoise()
+    val spark = Session.build(Session.cpus(32))
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     def gcStats(): (Long, Long) = {
       import scala.jdk.CollectionConverters._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Perf microscope: repeat one query N times at a given SF and print
   * per-iteration wall times, isolating fixed (planning/codegen) overhead
   * from data-dependent cost.
@@ -13,14 +11,7 @@ object PerfProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val iters = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    LogHygiene.suppressAccumulatorReleaseNoise()
+    val spark = Session.build(Session.cpus(32))
     names.foreach { name =>
       (1 to iters).foreach { i =>
         val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase-split probe: for each named query, separates DataFrame
   * CONSTRUCTION+PLANNING time (building the frame + forcing
   * executedPlan, which runs analysis/optimization/physical planning —
@@ -12,17 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    LogHygiene.suppressAccumulatorReleaseNoise()
+    val spark = Session.build(Session.cpus(32))
     val names = args(0).split(",").toSeq
     val iters = if (args.length > 1) args(1).toInt else 2
     names.foreach { n =>

@@ -1,55 +1,73 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
-/** Exact global ranks AND running sums WITHOUT a single-partition sort
-  * — the implemented version of the range-partitioned hatch the
-  * ops-layer scaladocs reference (`Mixing.scala` mega-stratum note). A
-  * `row_number()/sum() OVER (ORDER BY …)` window forces every row
-  * through ONE partition — fine for audit-sized frames, a straggler at
-  * fact scale (and for CONTINUOUS value domains the "value table" of a
-  * cumulative window is itself fact-sized). These helpers keep the sort
-  * distributed:
+/** Exact ranks, running sums and leads — global or per group — WITHOUT
+  * a single-partition sort: the range-partitioned hatch the ops-layer
+  * scaladocs reference (`Mixing.scala` mega-stratum note). A
+  * `row_number()/sum()/lead() OVER (ORDER BY …)` window forces every row
+  * through ONE partition (and `PARTITION BY` puts each mega-group on one
+  * task) — fine for audit-sized frames, a straggler at fact scale.
   *
-  *   1. `repartitionByRange` on the sort key (Spark's sampled range
-  *      exchange — each partition holds a contiguous key range),
-  *   2. `sortWithinPartitions` (partition-local sort, no global merge),
-  *   3. one bounded collect of per-partition partials (≤ one row per
-  *      shuffle partition: row counts for ranks, column partial sums
-  *      for running sums) → cumulative offsets, applied back either as
-  *      a broadcast equi-join (ranks) or inside one streaming partition
-  *      walk (running sums — a prefix sum is a sequential recurrence
-  *      with O(1) state, the packing-walk shape; no window, no second
-  *      exchange, no re-sort).
+  * Every entry point runs the same core, [[prefix]]:
   *
-  * rank = offset(partition) + local_index + 1 and
-  * cum(c) = sumOffset(partition, c) + local running sum are EXACT (not
-  * approximate) for any partitioning, because range partitions are
-  * key-contiguous and ordered; determinism needs `sortCols` to be a
-  * TOTAL order (append the id column as the final tie-break — ties
-  * split across a range boundary would otherwise rank
-  * nondeterministically; the cumulative-window call sites feed
-  * DISTINCT value tables, where the value itself is total).
+  *   1. `repartitionByRange` on (groupCols ++ sortCols) — each partition
+  *      holds a contiguous key range, so each group is contiguous across
+  *      the ordered partitions — then a partition-local sort;
+  *   2. `__mid = monotonically_increasing_id()` (= pid << 33 | local
+  *      index), frozen by ONE lazy `localCheckpoint` that the partials
+  *      job and the apply share;
+  *   3. ONE partials aggregate per (pid, group…): row count, max local
+  *      index (checks the id bit layout), column sums, the first lead
+  *      value — collected and scanned in range order into
+  *      exclusive per-(pid, group) offsets and next-boundary values;
+  *   4. the apply: one streaming partition walk seeded with those
+  *      offsets (a prefix sum is a sequential recurrence with O(1)
+  *      state — no window, no second exchange, no re-sort), or, for the
+  *      rank-only global forms, the codegen'd column
+  *      `offset(pid) + local index + 1` over the frozen `__mid`.
+  * [[runningMaxByValue]] shares steps 1–3 and walks tie groups instead.
   *
-  * Storage: the sorted frame is lazily localCheckpoint'ed (the partials
-  * job and the caller share one materialization); the blocks release
-  * via the ContextCleaner when the frame is GC'd — one-shot query use.
-  * A caller invoking this in a LOOP should release eagerly after its
-  * consuming action: the returned plan contains the checkpoint scan, so
-  * `Dedup.unpersistCheckpoint(returnedFrame)` drops the blocks.
+  * Contracts:
+  *   - (groupCols ++ sortCols) must be a TOTAL order (append the id
+  *     column as the final tie-break — ties split across a range
+  *     boundary would otherwise rank nondeterministically; the
+  *     cumulative-window call sites feed DISTINCT value tables, where
+  *     the value itself is total). Then the results are EXACT for any
+  *     partitioning.
+  *   - The partials collect is ≤ #groups + #partitions − 1 rows: use the
+  *     grouped forms for mega-strata (≲ thousands of groups), and plain
+  *     `Window.partitionBy` for many small groups, where Spark already
+  *     distributes fine and this collect would be group-scaled.
+  *   - Sums add nulls as 0, as SQL `sum` does. LongType sums throw on
+  *     overflow, as ANSI `sum` does; DecimalType sums accumulate exact
+  *     BigDecimals into the window-sum result type decimal(min(38, p+10), s).
+  *   - Output names, like the internal `__mid`/`__val`, must be free in
+  *     the input: a clash fails loudly instead of duplicating or
+  *     silently replacing the caller's column.
   *
-  * Scale shape: one range exchange + partition-local sorts + a
-  * #partitions-row collect + (broadcast equi-join | streaming partition
-  * walk) — no single-partition stage anywhere. */
+  * The partition id rides IN THE DATA (`__mid >> 33`, frozen by the
+  * checkpoint), never `TaskContext.getPartitionId`: the stage partition
+  * id only equals the RDD partition index when the stage STARTS at this
+  * scan — under a union/except the walk's stage renumbers partitions
+  * and a TaskContext-keyed lookup would seed every partition with its
+  * neighbor's offsets.
+  *
+  * Storage: the checkpoint blocks release via the ContextCleaner when
+  * the frame is GC'd — one-shot query use. A caller invoking this in a
+  * LOOP should release eagerly after its consuming action: the returned
+  * plan contains the checkpoint scan, so
+  * `Dedup.unpersistCheckpoint(returnedFrame)` drops the blocks. */
 object Ranks {
 
   /** Returns `df` plus a 1-based LongType global row number `rnCol`
     * under the total order `sortCols`. */
   def withRowNumber(df: DataFrame, rnCol: String,
       sortCols: Column*): DataFrame =
-    rankedWithTotal(df, rnCol, sortCols)._1
+    prefix(df, Nil, sortCols, Nil, None, Some(rnCol)).df
 
   /** `ntile(nBuckets) OVER (ORDER BY sortCols)` without the
     * single-partition window: the bucket derives from the exact rank
@@ -57,62 +75,9 @@ object Ranks {
     * action, no extra pass. */
   def withNtile(df: DataFrame, bucketCol: String, nBuckets: Int,
       sortCols: Column*): DataFrame = {
-    val (r, total) = rankedWithTotal(df, "__rnk", sortCols)
-    r.withColumn(bucketCol, ntileFromRank(col("__rnk"), total, nBuckets))
-      .drop("__rnk")
-  }
-
-  /** The helpers below stage internal columns with `withColumn`, which
-    * silently REPLACES a same-named caller column — the schema patch
-    * and the row patch would then disagree and the output would shift.
-    * Fail loudly instead. */
-  private def requireFreeNames(df: DataFrame, names: String*): Unit =
-    names.foreach(n => require(!df.columns.contains(n),
-      s"Ranks: input already has a column named '$n' (reserved for " +
-        "internal staging) — rename it before calling"))
-
-  private def rankedWithTotal(df: DataFrame, rnCol: String,
-      sortCols: Seq[Column]): (DataFrame, Long) = {
-    require(sortCols.nonEmpty, "need at least one sort column")
-    requireFreeNames(df, "__mid", "__pid", "__loc", "__off")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val parted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the count job + the caller
-    val pid = shiftright(col("__mid"), 33)
-    val local = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    val counts = parted.groupBy(pid.as("__pid"))
-      .agg(count(lit(1)).as("__c"), max(local).as("__ml"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    // the rank derives from monotonically_increasing_id's documented
-    // (pid << 33 | local index) layout; a partition past 2^33 rows (or
-    // a layout drift) would mis-attribute rows ACROSS pid groups, which
-    // this equality catches (an overflowed partition's spillover lands
-    // in the next pid with colliding local indices, so some group's
-    // count can no longer equal its max local index + 1) — fail loudly
-    // instead of silently misranking
-    counts.foreach { case (p, (c, ml)) =>
-      require(ml == c - 1,
-        s"rankedWithTotal: partition $p has count=$c but max local " +
-          s"index=$ml — monotonically_increasing_id bit-layout invariant " +
-          "violated (partition exceeded 2^33 rows?)")
-    }
-    val maxPid = if (counts.isEmpty) -1L else counts.keys.max
-    // cumulative offsets in partition order; range partitions are
-    // key-ordered, so offset(p) = Σ counts(p' < p)
-    val offsets = (0L to maxPid).scanLeft(0L)((acc, p) =>
-      acc + counts.get(p).map(_._1).getOrElse(0L))
-    val offsetDf = (0L to maxPid).map(p => (p, offsets(p.toInt)))
-      .toDF("__pid", "__off")
-    val out = parted.withColumn("__pid", pid).withColumn("__loc", local)
-      .join(broadcast(offsetDf), Seq("__pid"))
-      .withColumn(rnCol, col("__off") + col("__loc") + lit(1L))
-      .drop("__pid", "__loc", "__off", "__mid")
-    (out, counts.valuesIterator.map(_._1).sum)
+    // the rank is staged under the bucket's name, then replaced in place
+    val r = prefix(df, Nil, sortCols, Nil, None, Some(bucketCol))
+    r.df.withColumn(bucketCol, ntileFromRank(col(bucketCol), r.rows, nBuckets))
   }
 
   /** `ntile(n)` bucket (1-based) derived from an exact global rank over
@@ -130,32 +95,22 @@ object Ranks {
   }
 
   /** Result of [[runningSums]]: the decorated frame plus the grand
-    * totals and row count the per-partition partials job already
-    * computed — a caller that would otherwise run a global aggregate +
-    * crossJoin just to decorate rows with Σ reads them as literals
-    * instead (one fewer pass over the value table). */
+    * totals and row count the partials job already computed — a caller
+    * that would otherwise run a global aggregate + crossJoin just to
+    * decorate rows with Σ reads them as literals instead (one fewer
+    * pass over the value table). */
   final case class Running(df: DataFrame, totals: Map[String, Long],
       rows: Long)
 
   /** Distributed INCLUSIVE prefix sums under the total order
     * `sortCols`: for each `(in, out)` in `sums`, adds LongType `out` =
-    * `sum(in) OVER (ORDER BY sortCols ROWS UNBOUNDED PRECEDING)` — but
-    * with no single-partition window: range exchange, local sort, one
-    * ≤#partitions-row partials collect, then ONE streaming partition
-    * walk that seeds each partition with its exclusive offset. `lead`
+    * `sum(in) OVER (ORDER BY sortCols ROWS UNBOUNDED PRECEDING)`. `lead`
     * optionally emits the NEXT row's value of a column under the same
-    * order (`(src, out)`), with partition boundaries patched from the
-    * collected per-partition first values — the globally last row gets
-    * NULL, as `lead()` would.
-    *
-    * Contract: `sums` inputs must be LongType (nulls count as 0, as in
-    * SQL `sum`); `sortCols` must be a total order over `df`'s rows —
-    * the cumulative-window call sites (ROC, ECDF/KS, FD histogram,
-    * conformal) all feed DISTINCT value tables, where the value column
-    * itself is total. */
+    * order (`(src, out)`); the globally last row gets NULL, as `lead()`
+    * would. `sums` inputs must be LongType. */
   def runningSums(df: DataFrame, sums: Seq[(String, String)],
       lead: Option[(String, String)], sortCols: Column*): Running =
-    runningSumsImpl(df, sums, lead, None, sortCols)
+    runningLongSums(df, sums, lead, None, sortCols)
 
   /** [[runningSums]] that ALSO emits the 1-based LongType global row
     * number `rnCol` under the same order — the per-partition row counts
@@ -164,230 +119,15 @@ object Ranks {
   def runningSumsRanked(df: DataFrame, sums: Seq[(String, String)],
       lead: Option[(String, String)], rnCol: String,
       sortCols: Column*): Running =
-    runningSumsImpl(df, sums, lead, Some(rnCol), sortCols)
+    runningLongSums(df, sums, lead, Some(rnCol), sortCols)
 
-  private def runningSumsImpl(df: DataFrame, sums: Seq[(String, String)],
+  private def runningLongSums(df: DataFrame, sums: Seq[(String, String)],
       lead: Option[(String, String)], rnCol: Option[String],
       sortCols: Seq[Column]): Running = {
-    require(sortCols.nonEmpty, "need at least one sort column")
-    require(sums.nonEmpty, "need at least one sum column")
-    requireFreeNames(df, "__mid")
-    sums.foreach { case (in, _) =>
-      require(df.schema(in).dataType == LongType,
-        s"runningSums sums LongType columns; '$in' is " +
-          df.schema(in).dataType.simpleString)
-    }
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    // the partition id rides IN THE DATA as monotonically_increasing_id
-    // >> 33 (frozen by the checkpoint), never TaskContext.getPartitionId:
-    // the stage partition id only equals the RDD partition index when
-    // the stage STARTS at this scan — under a union/except the walk's
-    // stage renumbers partitions and a TaskContext-keyed offset lookup
-    // silently seeds every partition with its neighbor's sums (found by
-    // RunningSumsSpec's exceptAll, which plans a union)
-    val parted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val sumIdx = sums.map { case (in, _) => schema.fieldIndex(in) }.toArray
-    val leadIdx = lead.map { case (src, _) => schema.fieldIndex(src) }
-    val nSums = sumIdx.length
-    val pidOf = shiftright(col("__mid"), 33)
-    val localOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-
-    // partials: ONE partial-combining aggregate, ≤ 1 row per partition —
-    // row count (+ the rankedWithTotal bit-layout invariant), per-column
-    // partial sums, and (when lead is requested) the partition's FIRST
-    // value of the lead source in sorted order (min __mid = local row 0)
-    val aggCols =
-      Seq(count(lit(1)).as("__c"), max(localOf).as("__ml")) ++
-        sums.zipWithIndex.map { case ((in, _), k) =>
-          sum(col(in)).as(s"__s$k") } ++
-        lead.map { case (src, _) =>
-          min_by(col(src), col("__mid")).as("__fv") }
-    val partials = parted.groupBy(pidOf.as("__pid"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    val byPid = partials.map { r =>
-      val c = r.getLong(1)
-      require(r.getLong(2) == c - 1,
-        s"runningSums: partition ${r.getLong(0)} has count=$c but max " +
-          s"local index=${r.getLong(2)} — monotonically_increasing_id " +
-          "bit-layout invariant violated (partition exceeded 2^33 rows?)")
-      val ss = Array.tabulate(nSums)(k =>
-        if (r.isNullAt(3 + k)) 0L else r.getLong(3 + k))
-      r.getLong(0) -> (c, ss, if (leadIdx.isDefined) r.get(3 + nSums) else null)
-    }.sortBy(_._1)
-    val totals = sums.indices.map(k =>
-      sums(k)._1 -> byPid.map(_._2._2(k)).sum).toMap
-    val rows = byPid.map(_._2._1).sum
-    // exclusive offsets per partition (range partitions are key-ordered)
-    val offsetMap = scala.collection.mutable.Map.empty[Long, Array[Long]]
-    val rnOffMap = scala.collection.mutable.Map.empty[Long, Long]
-    val runAcc = new Array[Long](nSums)
-    var rowAcc = 0L
-    byPid.foreach { case (p, (c, ss, _)) =>
-      offsetMap(p) = runAcc.clone()
-      rnOffMap(p) = rowAcc
-      var k = 0; while (k < nSums) { runAcc(k) += ss(k); k += 1 }
-      rowAcc += c
-    }
-    // first value of the NEXT non-empty partition, for lead boundaries
-    val nextFirst: Map[Long, Any] =
-      if (leadIdx.isEmpty) Map.empty
-      else byPid.indices.dropRight(1)
-        .map(i => byPid(i)._1 -> byPid(i + 1)._2._3).toMap
-    val bOff = spark.sparkContext.broadcast(offsetMap.toMap)
-    val bNext = spark.sparkContext.broadcast(nextFirst)
-    val bRn = spark.sparkContext.broadcast(rnOffMap.toMap)
-
-    // __mid (the last field) stays internal — dropped from the output
-    val outSchema = StructType(schema.fields.patch(midIdx, Nil, 1) ++
-      sums.map { case (_, o) => StructField(o, LongType, nullable = false) } ++
-      lead.map { case (src, o) =>
-        StructField(o, schema(src).dataType, nullable = true) } ++
-      rnCol.map(n => StructField(n, LongType, nullable = false)))
-    val si = sumIdx // local vals: avoid closing over `this`
-    val li = leadIdx.getOrElse(-1)
-    val mi = midIdx
-    val hasLead = li >= 0
-    val wantRn = rnCol.isDefined
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        val acc = bOff.value.getOrElse(pid, new Array[Long](si.length)).clone()
-        val boundary = bNext.value.getOrElse(pid, null)
-        var rn = bRn.value.getOrElse(pid, 0L)
-        new Iterator[Row] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Row = {
-            val r = buf.next()
-            var k = 0
-            while (k < si.length) {
-              if (!r.isNullAt(si(k))) acc(k) += r.getLong(si(k)); k += 1
-            }
-            rn += 1
-            // snapshot — acc mutates on the NEXT next(); a live array
-            // view would corrupt already-emitted rows under a consumer
-            // that defers reading
-            val snap = java.util.Arrays.copyOf(acc, acc.length).toSeq
-            var tail: Seq[Any] =
-              if (hasLead)
-                snap :+ (if (buf.hasNext) buf.head.get(li) else boundary)
-              else snap
-            if (wantRn) tail = tail :+ rn
-            Row.fromSeq(r.toSeq.patch(mi, Nil, 1) ++ tail)
-          }
-        }
-      }
-    }(Encoders.row(outSchema))
-    Running(out, totals, rows)
-  }
-
-  /** Distributed RANGE-frame running maxima by VALUE: adds
-    * `outLt` = `max(in) OVER (ORDER BY valueCol RANGE BETWEEN UNBOUNDED
-    * PRECEDING AND 1 PRECEDING)` (max over rows with a strictly smaller
-    * value) and `outLe` = the same frame ending AT CURRENT ROW (the
-    * whole tie group included, as RANGE semantics demand) — with no
-    * single-partition window. Same machinery as [[runningSums]]: range
-    * exchange (equal values always land in ONE partition — the range
-    * partitioner splits BETWEEN key values), local sort, a
-    * ≤#partitions-row partials collect (per-partition max), one
-    * streaming partition walk seeded with the running max of all
-    * preceding partitions. The walk buffers ONE value group (tie run)
-    * at a time — the same working set any RANGE-frame engine needs,
-    * and orders of magnitude under the single-partition sort it
-    * replaces. `in` must be LongType; SQL max semantics (nulls skipped,
-    * NULL result for an empty/all-null frame). `valueCol` must be
-    * integer-valued for the `1 PRECEDING` reading of "strictly
-    * smaller". */
-  def runningMaxByValue(df: DataFrame, in: String, outLt: String,
-      outLe: String, valueCol: Column): DataFrame = {
-    requireFreeNames(df, "__mid", "__val")
-    require(df.schema(in).dataType == LongType,
-      s"runningMaxByValue needs a LongType input; '$in' is " +
-        df.schema(in).dataType.simpleString)
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    // the '1 PRECEDING' reading of "strictly smaller" needs an
-    // INTEGRAL value axis — a fractional value would silently truncate
-    // into the wrong tie group
-    val vType = df.select(valueCol.as("__v")).schema.head.dataType
-    require(Seq("byte", "short", "int", "integer", "long", "bigint")
-        .contains(vType.simpleString),
-      s"runningMaxByValue needs an integral value column, got " +
-        vType.simpleString)
-    val parted = df.repartitionByRange(nPart, valueCol)
-      .sortWithinPartitions(valueCol)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__val", valueCol.cast("long"))
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val valIdx = schema.fieldIndex("__val")
-    val inIdx = schema.fieldIndex(in)
-    val partials = parted.groupBy(shiftright(col("__mid"), 33).as("__pid"))
-      .agg(max(col(in)).as("__m"))
-      .collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .sortBy(_._1)
-    // exclusive prefix max per partition (range partitions are ordered)
-    val offsets = scala.collection.mutable.Map.empty[Long, Option[Long]]
-    var run: Option[Long] = None
-    partials.foreach { case (p, m) =>
-      offsets(p) = run
-      run = (run, m) match {
-        case (Some(a), Some(b)) => Some(math.max(a, b))
-        case (a, b) => a.orElse(b)
-      }
-    }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    val outSchema = StructType(
-      schema.fields.patch(valIdx, Nil, 1).patch(midIdx, Nil, 1) ++ Seq(
-        StructField(outLt, LongType, nullable = true),
-        StructField(outLe, LongType, nullable = true)))
-    val mi = midIdx; val vi = valIdx; val ii = inIdx
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        var before: Option[Long] = bOff.value.getOrElse(pid, None)
-        // emit one TIE GROUP at a time: every row of the group shares
-        // maxLt (= max before the group) and maxLe (= before + group max)
-        new Iterator[Seq[Row]] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Seq[Row] = {
-            val v = buf.head.getLong(vi)
-            val group = scala.collection.mutable.ArrayBuffer.empty[Row]
-            var gMax: Option[Long] = None
-            while (buf.hasNext && buf.head.getLong(vi) == v) {
-              val r = buf.next()
-              if (!r.isNullAt(ii))
-                gMax = Some(gMax.fold(r.getLong(ii))(math.max(_, r.getLong(ii))))
-              group += r
-            }
-            val le = (before, gMax) match {
-              case (Some(a), Some(b)) => Some(math.max(a, b))
-              case (a, b) => a.orElse(b)
-            }
-            val lt = before
-            before = le
-            group.map { r =>
-              val base = r.toSeq.patch(math.max(mi, vi), Nil, 1)
-                .patch(math.min(mi, vi), Nil, 1)
-              Row.fromSeq(base ++ Seq(lt.orNull, le.orNull))
-            }.toSeq
-          }
-        }.flatten
-      }
-    }(Encoders.row(outSchema))
-    out
+    requireSums(df, sums, "runningSums", decimal = false)
+    val p = prefix(df, Nil, sortCols, sums, lead, rnCol)
+    Running(p.df, sums.map(_._1).zip(p.totals.map(_.asInstanceOf[Long])).toMap,
+      p.rows)
   }
 
   /** Result of [[runningDecimalSums]]: the decorated frame plus the
@@ -396,439 +136,316 @@ object Ranks {
       totals: Map[String, java.math.BigDecimal], rows: Long)
 
   /** [[runningSums]] for EXACT DecimalType columns (revenue-style
-    * cumulative shares: ABC/Pareto/elbow curves over entity tables):
-    * for each `(in, out)` in `sums`, adds `out` =
-    * `sum(in) OVER (ORDER BY sortCols ROWS UNBOUNDED PRECEDING)` with
-    * the same machinery — range exchange, local sort, ≤#partitions-row
-    * partials collect, ONE streaming partition walk — and unbounded
-    * java.math.BigDecimal accumulators, so the running values are exact
-    * for any data size (only the OUTPUT column caps at Spark's
-    * decimal(38) — the same cap the window form has). The output type is
-    * exactly the window-sum result type, decimal(min(38, p+10), s), so
-    * downstream decimal arithmetic is bit-identical to the plan it
-    * replaces. `rnCol`, when set, ALSO emits the 1-based LongType global
-    * row number under the same order — the per-partition row counts are
-    * already in the partials, so rank + cumulative + totals + count all
-    * come out of one exchange (the elbow/Pareto shape needs all four).
-    * Same null contract as [[runningSums]]: nulls add 0. */
+    * cumulative shares: ABC/Pareto/elbow curves over entity tables),
+    * with unbounded BigDecimal accumulators, so the running values are
+    * exact for any data size (only the OUTPUT column caps at Spark's
+    * decimal(38) — the same cap the window form has). `rnCol`, when
+    * set, ALSO emits the 1-based LongType global row number under the
+    * same order (the elbow/Pareto shape needs rank + cumulative +
+    * totals + count, all from one exchange). */
   def runningDecimalSums(df: DataFrame, sums: Seq[(String, String)],
       rnCol: Option[String], sortCols: Column*): RunningDec = {
-    require(sortCols.nonEmpty, "need at least one sort column")
-    require(sums.nonEmpty, "need at least one sum column")
-    requireFreeNames(df, "__mid")
-    val inTypes = sums.map { case (in, _) =>
-      df.schema(in).dataType match {
-        case d: DecimalType => in -> d
-        case other => throw new IllegalArgumentException(
-          s"runningDecimalSums sums DecimalType columns; '$in' is " +
-            other.simpleString)
-      }
-    }
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val parted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val sumIdx = sums.map { case (in, _) => schema.fieldIndex(in) }.toArray
-    val nSums = sumIdx.length
-    val pidOf = shiftright(col("__mid"), 33)
-    val localOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    val aggCols =
-      Seq(count(lit(1)).as("__c"), max(localOf).as("__ml")) ++
-        sums.zipWithIndex.map { case ((in, _), k) =>
-          sum(col(in)).as(s"__s$k") }
-    val partials = parted.groupBy(pidOf.as("__pid"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    val byPid = partials.map { r =>
-      val c = r.getLong(1)
-      require(r.getLong(2) == c - 1,
-        s"runningDecimalSums: partition ${r.getLong(0)} has count=$c but " +
-          s"max local index=${r.getLong(2)} — monotonically_increasing_id " +
-          "bit-layout invariant violated (partition exceeded 2^33 rows?)")
-      val ss = Array.tabulate(nSums)(k =>
-        if (r.isNullAt(3 + k)) java.math.BigDecimal.ZERO
-        else r.getDecimal(3 + k))
-      r.getLong(0) -> (c, ss)
-    }.sortBy(_._1)
-    val totals = sums.indices.map(k => sums(k)._1 ->
-      byPid.map(_._2._2(k)).foldLeft(java.math.BigDecimal.ZERO)(_.add(_)))
-      .toMap
-    val rows = byPid.map(_._2._1).sum
-    // exclusive offsets per partition: decimal sums + row counts
-    val decOff = scala.collection.mutable.Map.empty[Long, Array[java.math.BigDecimal]]
-    val rnOff = scala.collection.mutable.Map.empty[Long, Long]
-    val decAcc = Array.fill(nSums)(java.math.BigDecimal.ZERO)
-    var rowAcc = 0L
-    byPid.foreach { case (p, (c, ss)) =>
-      decOff(p) = decAcc.clone()
-      rnOff(p) = rowAcc
-      var k = 0; while (k < nSums) { decAcc(k) = decAcc(k).add(ss(k)); k += 1 }
-      rowAcc += c
-    }
-    val bDec = spark.sparkContext.broadcast(decOff.toMap)
-    val bRn = spark.sparkContext.broadcast(rnOff.toMap)
-    // output decimal type = Spark's window/agg sum result type
-    val outTypes = inTypes.map { case (_, d) =>
-      DecimalType(math.min(38, d.precision + 10), d.scale) }
-    val outSchema = StructType(schema.fields.patch(midIdx, Nil, 1) ++
-      sums.zip(outTypes).map { case ((_, o), t) =>
-        StructField(o, t, nullable = false) } ++
-      rnCol.map(n => StructField(n, LongType, nullable = false)))
-    val si = sumIdx
-    val mi = midIdx
-    val scales = outTypes.map(_.scale).toArray
-    val wantRn = rnCol.isDefined
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        val acc = bDec.value.getOrElse(pid,
-          Array.fill(si.length)(java.math.BigDecimal.ZERO)).clone()
-        var rn = bRn.value.getOrElse(pid, 0L)
-        new Iterator[Row] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Row = {
-            val r = buf.next()
-            var k = 0
-            while (k < si.length) {
-              if (!r.isNullAt(si(k))) acc(k) = acc(k).add(r.getDecimal(si(k)))
-              k += 1
-            }
-            rn += 1
-            val snap: Seq[Any] = Array.tabulate[Any](si.length)(k =>
-              acc(k).setScale(scales(k))).toSeq
-            val tail = if (wantRn) snap :+ rn else snap
-            Row.fromSeq(r.toSeq.patch(mi, Nil, 1) ++ tail)
-          }
-        }
-      }
-    }(Encoders.row(outSchema))
-    RunningDec(out, totals, rows)
+    requireSums(df, sums, "runningDecimalSums", decimal = true)
+    val p = prefix(df, Nil, sortCols, sums, None, rnCol)
+    RunningDec(p.df, sums.map(_._1)
+      .zip(p.totals.map(_.asInstanceOf[java.math.BigDecimal])).toMap, p.rows)
   }
 
   /** PER-GROUP inclusive prefix sums — `sum(in) OVER (PARTITION BY
     * groupCols ORDER BY sortCols ROWS UNBOUNDED PRECEDING)` — for the
     * FEW-HUGE-GROUPS regime where `Window.partitionBy` itself is the
     * straggler (one mega-stratum lands on one task: the documented
-    * `Mixing` escape-hatch class). Range-partitions on (groupCols ++
-    * sortCols), so every group is CONTIGUOUS across the ordered
-    * partitions and each partition holds a contiguous run of groups;
-    * the partials collect is therefore ≤ #groups + #partitions − 1
-    * rows. That bound is the contract: use this for mega-strata
-    * (≲ thousands of groups), and plain `Window.partitionBy` for
-    * many-small-groups, where Spark already distributes fine and this
-    * hatch's driver collect would be group-scaled.
-    * Same column contract as [[runningSums]]: LongType sums, nulls
-    * add 0, (groupCols ++ sortCols) must totally order rows. */
+    * `Mixing` escape-hatch class). LongType sums. */
   def runningSumsBy(df: DataFrame, groupCols: Seq[String],
       sums: Seq[(String, String)], sortCols: Column*): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column " +
-      "(use runningSums for the global form)")
-    require(sortCols.nonEmpty, "need at least one sort column")
-    require(sums.nonEmpty, "need at least one sum column")
-    requireFreeNames(df, "__mid")
-    sums.foreach { case (in, _) =>
-      require(df.schema(in).dataType == LongType,
-        s"runningSumsBy sums LongType columns; '$in' is " +
-          df.schema(in).dataType.simpleString)
-    }
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keyCols = groupCols.map(col) ++ sortCols
-    val parted = df.repartitionByRange(nPart, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val grpIdx = groupCols.map(schema.fieldIndex).toArray
-    val sumIdx = sums.map { case (in, _) => schema.fieldIndex(in) }.toArray
-    val nSums = sumIdx.length
-    val pidOf = shiftright(col("__mid"), 33)
-    val localOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    // partials per (partition, group): ≤ #groups + #partitions − 1 rows
-    // by group contiguity; the per-PARTITION count/max-local pair still
-    // checks the id bit-layout invariant
-    val aggCols =
-      Seq(count(lit(1)).as("__c"), max(localOf).as("__ml")) ++
-        sums.zipWithIndex.map { case ((in, _), k) =>
-          sum(col(in)).as(s"__s$k") }
-    val partials = parted
-      .groupBy((pidOf.as("__pid") +: groupCols.map(col)): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    partials.groupBy(_.getLong(0)).foreach { case (p, rs) =>
-      val c = rs.map(_.getLong(1 + groupCols.length)).sum
-      val ml = rs.map(_.getLong(2 + groupCols.length)).max
-      require(ml == c - 1,
-        s"runningSumsBy: partition $p has count=$c but max local " +
-          s"index=$ml — monotonically_increasing_id bit-layout invariant " +
-          "violated (partition exceeded 2^33 rows?)")
-    }
-    // exclusive offsets per (group, partition): scan each group's
-    // partitions in range order
-    val nGrp = groupCols.length
-    def keyOf(r: Row): List[Any] = List.tabulate(nGrp)(i => r.get(1 + i))
-    val offsets = scala.collection.mutable.Map.empty[(Long, List[Any]), Array[Long]]
-    partials.groupBy(keyOf).foreach { case (g, rs) =>
-      val acc = new Array[Long](nSums)
-      rs.sortBy(_.getLong(0)).foreach { r =>
-        offsets((r.getLong(0), g)) = acc.clone()
-        var k = 0
-        while (k < nSums) {
-          // partial row layout: (__pid, group…, __c, __ml, __s0, __s1…)
-          if (!r.isNullAt(3 + nGrp + k)) acc(k) += r.getLong(3 + nGrp + k)
-          k += 1
-        }
-      }
-    }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    val outSchema = StructType(schema.fields.patch(midIdx, Nil, 1) ++
-      sums.map { case (_, o) => StructField(o, LongType, nullable = false) })
-    val si = sumIdx; val gi = grpIdx; val mi = midIdx
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        val off = bOff.value
-        // rows arrive group-contiguous (partition-local sort leads with
-        // the group key): one live accumulator, reseeded per group run
-        var curKey: List[Any] = null
-        var acc: Array[Long] = null
-        new Iterator[Row] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Row = {
-            val r = buf.next()
-            val k0 = List.tabulate(gi.length)(i => r.get(gi(i)))
-            if (curKey == null || k0 != curKey) {
-              curKey = k0
-              acc = off.getOrElse((pid, k0),
-                new Array[Long](si.length)).clone()
-            }
-            var k = 0
-            while (k < si.length) {
-              if (!r.isNullAt(si(k))) acc(k) += r.getLong(si(k)); k += 1
-            }
-            val snap = java.util.Arrays.copyOf(acc, acc.length).toSeq
-            Row.fromSeq(r.toSeq.patch(mi, Nil, 1) ++ snap)
-          }
-        }
-      }
-    }(Encoders.row(outSchema))
-    out
+    requireGroups(groupCols, "runningSums")
+    requireSums(df, sums, "runningSumsBy", decimal = false)
+    prefix(df, groupCols, sortCols, sums, None, None).df
   }
 
   /** PER-GROUP 1-based LongType row number — the grouped twin of
     * [[withRowNumber]] for the few-huge-groups regime (per-stratum
-    * rank/quota cuts): an inclusive prefix count of ones through
-    * [[runningSumsBy]], so no group ever lands on one task. Same
-    * contract: (groupCols ++ sortCols) must totally order rows;
-    * many-small-groups stay on `Window.partitionBy`. */
+    * rank/quota cuts), so no group ever lands on one task. */
   def withRowNumberBy(df: DataFrame, groupCols: Seq[String],
       rnCol: String, sortCols: Column*): DataFrame = {
-    requireFreeNames(df, "__one")
-    runningSumsBy(df.withColumn("__one", lit(1L)), groupCols,
-      Seq("__one" -> rnCol), sortCols: _*).drop("__one")
+    requireGroups(groupCols, "withRowNumber")
+    prefix(df, groupCols, sortCols, Nil, None, Some(rnCol)).df
   }
 
   /** [[runningSumsBy]] for EXACT DecimalType columns — the grouped twin
     * of [[runningDecimalSums]] (revenue/weight cumulatives per stratum:
-    * the weighted-median class). Same contiguity machinery and the
-    * same ≤ #groups + #partitions − 1 partials bound; unbounded
-    * BigDecimal accumulators in the walk; output type =
-    * decimal(min(38, p+10), s), the window-sum result type. */
+    * the weighted-median class). */
   def runningDecimalSumsBy(df: DataFrame, groupCols: Seq[String],
       sums: Seq[(String, String)], sortCols: Column*): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column " +
-      "(use runningDecimalSums for the global form)")
-    require(sortCols.nonEmpty, "need at least one sort column")
-    require(sums.nonEmpty, "need at least one sum column")
-    requireFreeNames(df, "__mid")
-    val inTypes = sums.map { case (in, _) =>
-      df.schema(in).dataType match {
-        case d: DecimalType => in -> d
-        case other => throw new IllegalArgumentException(
-          s"runningDecimalSumsBy sums DecimalType columns; '$in' is " +
-            other.simpleString)
-      }
-    }
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keyCols = groupCols.map(col) ++ sortCols
-    val parted = df.repartitionByRange(nPart, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val grpIdx = groupCols.map(schema.fieldIndex).toArray
-    val sumIdx = sums.map { case (in, _) => schema.fieldIndex(in) }.toArray
-    val nSums = sumIdx.length
-    val nGrp = groupCols.length
-    val pidOf = shiftright(col("__mid"), 33)
-    val localOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    val aggCols =
-      Seq(count(lit(1)).as("__c"), max(localOf).as("__ml")) ++
-        sums.zipWithIndex.map { case ((in, _), k) =>
-          sum(col(in)).as(s"__s$k") }
-    val partials = parted
-      .groupBy((pidOf.as("__pid") +: groupCols.map(col)): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    partials.groupBy(_.getLong(0)).foreach { case (p, rs) =>
-      val c = rs.map(_.getLong(1 + nGrp)).sum
-      val ml = rs.map(_.getLong(2 + nGrp)).max
-      require(ml == c - 1,
-        s"runningDecimalSumsBy: partition $p has count=$c but max local " +
-          s"index=$ml — monotonically_increasing_id bit-layout invariant " +
-          "violated (partition exceeded 2^33 rows?)")
-    }
-    def keyOf(r: Row): List[Any] = List.tabulate(nGrp)(i => r.get(1 + i))
-    val offsets =
-      scala.collection.mutable.Map.empty[(Long, List[Any]), Array[java.math.BigDecimal]]
-    partials.groupBy(keyOf).foreach { case (g, rs) =>
-      val acc = Array.fill(nSums)(java.math.BigDecimal.ZERO)
-      rs.sortBy(_.getLong(0)).foreach { r =>
-        offsets((r.getLong(0), g)) = acc.clone()
-        var k = 0
-        while (k < nSums) {
-          // partial row layout: (__pid, group…, __c, __ml, __s0, __s1…)
-          if (!r.isNullAt(3 + nGrp + k))
-            acc(k) = acc(k).add(r.getDecimal(3 + nGrp + k))
-          k += 1
-        }
-      }
-    }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    val outTypes = inTypes.map { case (_, d) =>
-      DecimalType(math.min(38, d.precision + 10), d.scale) }
-    val outSchema = StructType(schema.fields.patch(midIdx, Nil, 1) ++
-      sums.zip(outTypes).map { case ((_, o), t) =>
-        StructField(o, t, nullable = false) })
-    val si = sumIdx; val gi = grpIdx; val mi = midIdx
-    val scales = outTypes.map(_.scale).toArray
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        val off = bOff.value
-        var curKey: List[Any] = null
-        var acc: Array[java.math.BigDecimal] = null
-        new Iterator[Row] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Row = {
-            val r = buf.next()
-            val k0 = List.tabulate(gi.length)(i => r.get(gi(i)))
-            if (curKey == null || k0 != curKey) {
-              curKey = k0
-              acc = off.getOrElse((pid, k0),
-                Array.fill(si.length)(java.math.BigDecimal.ZERO)).clone()
-            }
-            var k = 0
-            while (k < si.length) {
-              if (!r.isNullAt(si(k))) acc(k) = acc(k).add(r.getDecimal(si(k)))
-              k += 1
-            }
-            val snap: Seq[Any] = Array.tabulate[Any](si.length)(k =>
-              acc(k).setScale(scales(k))).toSeq
-            Row.fromSeq(r.toSeq.patch(mi, Nil, 1) ++ snap)
-          }
-        }
-      }
-    }(Encoders.row(outSchema))
-    out
+    requireGroups(groupCols, "runningDecimalSums")
+    requireSums(df, sums, "runningDecimalSumsBy", decimal = true)
+    prefix(df, groupCols, sortCols, sums, None, None).df
   }
 
   /** PER-GROUP lead — `lead(src) OVER (PARTITION BY groupCols ORDER BY
     * sortCols)` for the few-huge-groups regime: adds `out` = the NEXT
     * row's value of `src` under the group-local order, NULL on each
-    * group's last row. Same contiguity machinery as [[runningSumsBy]]:
-    * range exchange on (groupCols ++ sortCols) keeps every group
-    * contiguous across ordered partitions, so a partition-boundary row's
-    * lead patches from the collected FIRST `src` value of the next
-    * partition that still holds its group (a group ending mid-partition
-    * is globally finished — contiguity — so its last row gets NULL with
-    * no lookup). The partials collect stays ≤ #groups + #partitions − 1
-    * rows; same many-small-groups caveat: `Window.partitionBy` is the
-    * right tool there. */
+    * group's last row. A partition-boundary row's lead comes from the
+    * collected FIRST `src` value of the next partition that still holds
+    * its group; a group ending mid-partition is globally finished
+    * (contiguity), so its last row gets NULL with no lookup. */
   def runningLeadBy(df: DataFrame, groupCols: Seq[String],
       lead: (String, String), sortCols: Column*): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column " +
-      "(use runningSums' lead for the global form)")
+    requireGroups(groupCols, "runningSums' lead")
+    prefix(df, groupCols, sortCols, Nil, Some(lead), None).df
+  }
+
+  /** Distributed RANGE-frame running maxima by VALUE: adds
+    * `outLt` = `max(in) OVER (ORDER BY valueCol RANGE BETWEEN UNBOUNDED
+    * PRECEDING AND 1 PRECEDING)` (max over rows with a strictly smaller
+    * value) and `outLe` = the same frame ending AT CURRENT ROW (the
+    * whole tie group included, as RANGE semantics demand). Equal values
+    * always land in ONE range partition (the range partitioner splits
+    * BETWEEN key values); the partials are per-partition maxima, and the
+    * walk buffers ONE value group (tie run) at a time — the same working
+    * set any RANGE-frame engine needs. `in` must be LongType; SQL max
+    * semantics (nulls skipped, NULL result for an empty/all-null frame).
+    * `valueCol` must be integral for the `1 PRECEDING` reading of
+    * "strictly smaller". */
+  def runningMaxByValue(df: DataFrame, in: String, outLt: String,
+      outLe: String, valueCol: Column): DataFrame = {
+    require(df.schema(in).dataType == LongType,
+      s"runningMaxByValue needs a LongType input; '$in' is " +
+        df.schema(in).dataType.simpleString)
+    // a fractional value would silently truncate into the wrong tie group
+    val vType = df.select(valueCol).schema.head.dataType
+    require(Seq("byte", "short", "int", "integer", "long", "bigint")
+        .contains(vType.simpleString),
+      s"runningMaxByValue needs an integral value column, got " +
+        vType.simpleString)
+    val (parted, partials) = sortedPartials(df, Seq("__val", outLt, outLe),
+      Nil, Seq(valueCol), Seq(max(col(in))), Seq("__val" -> valueCol.cast("long")))
+    // exclusive prefix max per partition (range partitions are ordered)
+    val maxBefore = partials.scanLeft(Option.empty[Long])((run, p) =>
+      (run ++ Option(p.vals(0)).map(_.asInstanceOf[Long])).maxOption)
+    val bOff = df.sparkSession.sparkContext.broadcast(
+      partials.map(_.pid).zip(maxBefore).toMap)
+    val schema = parted.schema
+    val mi = schema.fieldIndex("__mid")
+    val vi = schema.fieldIndex("__val")
+    val ii = schema.fieldIndex(in)
+    val outSchema = StructType(schema.fields.take(mi) ++ Seq(
+      StructField(outLt, LongType, nullable = true),
+      StructField(outLe, LongType, nullable = true)))
+    parted.mapPartitions { it =>
+      val buf = it.buffered
+      var before: Option[Long] = None
+      if (buf.hasNext) before = bOff.value(buf.head.getLong(mi) >>> 33)
+      // emit one TIE GROUP at a time: every row of the group shares
+      // maxLt (= max before the group) and maxLe (= before + group max)
+      new Iterator[Seq[Row]] {
+        override def hasNext: Boolean = buf.hasNext
+        override def next(): Seq[Row] = {
+          val v = buf.head.getLong(vi)
+          val group = scala.collection.mutable.ArrayBuffer.empty[Row]
+          while (buf.hasNext && buf.head.getLong(vi) == v) group += buf.next()
+          val lt = before
+          before = (before ++ group.filterNot(_.isNullAt(ii))
+            .map(_.getLong(ii))).maxOption
+          group.map(r => Row.fromSeq(r.toSeq.take(mi) ++
+            Seq(lt.orNull, before.orNull))).toSeq
+        }
+      }.flatten
+    }(Encoders.row(outSchema))
+  }
+
+  private def requireGroups(groupCols: Seq[String], global: String): Unit =
+    require(groupCols.nonEmpty,
+      s"need at least one group column (use $global for the global form)")
+
+  private def requireSums(df: DataFrame, sums: Seq[(String, String)],
+      fn: String, decimal: Boolean): Unit = {
+    require(sums.nonEmpty, "need at least one sum column")
+    val want = if (decimal) "DecimalType" else "LongType"
+    sums.foreach { case (in, _) =>
+      val t = df.schema(in).dataType
+      require(if (decimal) t.isInstanceOf[DecimalType] else t == LongType,
+        s"$fn sums $want columns; '$in' is ${t.simpleString}")
+    }
+  }
+
+  /** One partials row: range partition `pid`, group `key` (Nil for the
+    * global forms), its row count and max local index, and the caller's
+    * aggregates in order. */
+  private final case class Partial(pid: Long, key: List[Any], rows: Long,
+      maxLocal: Long, vals: IndexedSeq[Any])
+
+  private def localOf: Column = col("__mid").bitwiseAND(lit((1L << 33) - 1))
+
+  /** Steps 1–3 of the header: the range-sorted, checkpointed frame
+    * (input columns, `__mid`, then `staged`) and its per-(pid, group)
+    * partials sorted by pid. `names` are the caller's output and staging
+    * names, which must be free in `df`. */
+  private def sortedPartials(df: DataFrame, names: Seq[String],
+      groupCols: Seq[String], sortCols: Seq[Column], aggs: Seq[Column],
+      staged: Seq[(String, Column)] = Nil): (DataFrame, Seq[Partial]) = {
     require(sortCols.nonEmpty, "need at least one sort column")
-    requireFreeNames(df, "__mid")
-    val (src, outName) = lead
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    ("__mid" +: names).foreach(n => require(!df.columns.exists(resolver(_, n)),
+      s"Ranks: input already has a column named '$n' (an output or " +
+        "internal staging name) — rename it before calling"))
+    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
     val keyCols = groupCols.map(col) ++ sortCols
     val parted = df.repartitionByRange(nPart, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // consumers: the partials job + the walk
-    val schema = parted.schema
-    val midIdx = schema.fieldIndex("__mid")
-    val grpIdx = groupCols.map(schema.fieldIndex).toArray
-    val srcIdx = schema.fieldIndex(src)
+      .select((col("*") +: monotonically_increasing_id().as("__mid") +:
+        staged.map { case (n, c) => c.as(n) }): _*)
+      .localCheckpoint(false) // consumers: the partials job + the apply
     val nGrp = groupCols.length
-    val pidOf = shiftright(col("__mid"), 33)
-    val localOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
+    val aggCols = Seq(count(lit(1)), max(localOf)) ++ aggs
     val partials = parted
-      .groupBy((pidOf.as("__pid") +: groupCols.map(col)): _*)
-      .agg(count(lit(1)).as("__c"), max(localOf).as("__ml"),
-        min_by(col(src), col("__mid")).as("__fv"))
+      .groupBy((shiftright(col("__mid"), 33) +: groupCols.map(col)): _*)
+      .agg(aggCols.head, aggCols.tail: _*)
       .collect()
-    partials.groupBy(_.getLong(0)).foreach { case (p, rs) =>
-      val c = rs.map(_.getLong(1 + nGrp)).sum
-      val ml = rs.map(_.getLong(2 + nGrp)).max
+      .map(r => Partial(r.getLong(0), List.tabulate(nGrp)(i => r.get(1 + i)),
+        r.getLong(1 + nGrp), r.getLong(2 + nGrp),
+        (3 + nGrp until r.length).map(r.get)))
+      .sortBy(_.pid).toSeq
+    // the walk and the rank derive from monotonically_increasing_id's
+    // documented (pid << 33 | local index) layout; a partition past 2^33
+    // rows (or a layout drift) would mis-attribute rows ACROSS pids,
+    // which this equality catches (the spillover lands in the next pid
+    // with colliding local indices) — fail loudly instead of misranking
+    partials.groupBy(_.pid).foreach { case (p, ps) =>
+      val c = ps.map(_.rows).sum
+      val ml = ps.map(_.maxLocal).max
       require(ml == c - 1,
-        s"runningLeadBy: partition $p has count=$c but max local " +
-          s"index=$ml — monotonically_increasing_id bit-layout invariant " +
-          "violated (partition exceeded 2^33 rows?)")
+        s"Ranks: partition $p has count=$c but max local index=$ml — " +
+          "monotonically_increasing_id bit-layout invariant violated " +
+          "(partition exceeded 2^33 rows?)")
     }
-    def keyOf(r: Row): List[Any] = List.tabulate(nGrp)(i => r.get(1 + i))
-    // boundary for (p, g) = first src value of the NEXT partition that
-    // holds g (group pid-runs are consecutive up to empty partitions)
-    val boundary = scala.collection.mutable.Map.empty[(Long, List[Any]), Any]
-    partials.groupBy(keyOf).foreach { case (g, rs) =>
-      rs.sortBy(_.getLong(0)).sliding(2).foreach {
-        case Array(a, b) =>
-          boundary((a.getLong(0), g)) = b.get(3 + nGrp)
-        case _ => ()
+    (parted, partials)
+  }
+
+  /** `a + b` for one running column: exact for decimals, `addExact`
+    * for longs (overflow throws, as ANSI `sum` does); null adds 0. */
+  private def plus(a: Any, b: Any): Any = b match {
+    case null => a
+    case d: java.math.BigDecimal => a.asInstanceOf[java.math.BigDecimal].add(d)
+    case l: Long => Math.addExact(a.asInstanceOf[Long], l)
+  }
+
+  /** Where one walk run (a group's rows in one partition) starts: the
+    * exclusive sums and row count of the group's earlier partitions, and
+    * the first lead value of its next partition (null if none). */
+  private final case class Seed(sums: Array[Any], rows: Long, next: Any)
+
+  private final case class Prefix(df: DataFrame, totals: Seq[Any], rows: Long)
+
+  /** The one core behind every prefix form: `df` plus, per group and
+    * under (groupCols ++ sortCols), the inclusive running `sums` (Long
+    * or exact BigDecimal, following each input's type), the `lead`
+    * column and the 1-based row number `rnCol`, in that column order;
+    * with the grand totals of `sums` and the row count. */
+  private def prefix(df: DataFrame, groupCols: Seq[String],
+      sortCols: Seq[Column], sums: Seq[(String, String)],
+      lead: Option[(String, String)], rnCol: Option[String]): Prefix = {
+    val (parted, partials) = sortedPartials(df,
+      sums.map(_._2) ++ lead.map(_._2) ++ rnCol, groupCols, sortCols,
+      sums.map { case (in, _) => sum(col(in)) } ++
+        lead.map { case (src, _) => min_by(col(src), col("__mid")) })
+    val zero: Array[Any] = sums.map { case (in, _) =>
+      df.schema(in).dataType match {
+        case d: DecimalType => java.math.BigDecimal.ZERO.setScale(d.scale)
+        case _ => 0L
       }
-    }
-    val bNext = spark.sparkContext.broadcast(boundary.toMap)
-    val outSchema = StructType(schema.fields.patch(midIdx, Nil, 1) :+
-      StructField(outName, schema(src).dataType, nullable = true))
-    val gi = grpIdx; val mi = midIdx; val siL = srcIdx
-    val out = parted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val pid = buf.head.getLong(mi) >>> 33
-        val bnd = bNext.value
-        new Iterator[Row] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): Row = {
-            val r = buf.next()
-            val k0 = List.tabulate(gi.length)(i => r.get(gi(i)))
-            val lead: Any =
-              if (buf.hasNext) {
-                val nx = buf.head
-                val k1 = List.tabulate(gi.length)(i => nx.get(gi(i)))
-                if (k1 == k0) nx.get(siL) else null
-              } else bnd.getOrElse((pid, k0), null)
-            Row.fromSeq(r.toSeq.patch(mi, Nil, 1) :+ lead)
-          }
+    }.toArray
+    val totals = sums.indices.map(k =>
+      partials.foldLeft(zero(k))((a, p) => plus(a, p.vals(k))))
+    val rows = partials.foldLeft(0L)((a, p) => Math.addExact(a, p.rows))
+    val out = if (groupCols.isEmpty && sums.isEmpty && lead.isEmpty) {
+      // rank only: a codegen'd column, no Row deserialization
+      val off = new Array[Long](partials.lastOption.fold(0)(_.pid.toInt + 1))
+      partials.foldLeft(0L) { (a, p) => off(p.pid.toInt) = a; a + p.rows }
+      val rank = typedLit(off.toSeq)
+        .getItem(shiftright(col("__mid"), 33).cast("int")) + localOf + 1L
+      parted.withColumn(rnCol.get, rank).drop("__mid")
+    } else walk(parted, groupCols, sums, lead, rnCol, partials, zero)
+    Prefix(out, totals, rows)
+  }
+
+  /** Step 4 of the header for everything but the rank-only global
+    * forms: seed each (pid, group) run from the partials scan, then one
+    * streaming walk per partition. */
+  private def walk(parted: DataFrame, groupCols: Seq[String],
+      sums: Seq[(String, String)], lead: Option[(String, String)],
+      rnCol: Option[String], partials: Seq[Partial],
+      zero: Array[Any]): DataFrame = {
+    // exclusive offsets per (pid, group): scan each group's partitions
+    // in range order (partials are pid-sorted; groupBy keeps that order)
+    val nSums = sums.length
+    val seeds = partials.groupBy(_.key).toSeq.flatMap { case (g, ps) =>
+      val acc = zero.clone()
+      var seen = 0L
+      ps.indices.map { i =>
+        val next = if (lead.isDefined && i + 1 < ps.length) ps(i + 1).vals(nSums)
+          else null
+        val seed = (ps(i).pid, g) -> Seed(acc.clone(), seen, next)
+        for (k <- 0 until nSums) acc(k) = plus(acc(k), ps(i).vals(k))
+        seen = Math.addExact(seen, ps(i).rows)
+        seed
+      }
+    }.toMap
+    val bSeeds = parted.sparkSession.sparkContext.broadcast(seeds)
+    val schema = parted.schema
+    val mi = schema.fieldIndex("__mid")
+    val outSchema = StructType(schema.fields.take(mi) ++
+      sums.map { case (in, o) =>
+        val t = schema(in).dataType match {
+          // the window-sum result type
+          case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
+          case t => t
         }
+        StructField(o, t, nullable = false)
+      } ++
+      lead.map { case (src, o) =>
+        StructField(o, schema(src).dataType, nullable = true) } ++
+      rnCol.map(StructField(_, LongType, nullable = false)))
+    val si = sums.map { case (in, _) => schema.fieldIndex(in) }.toArray
+    val gi = groupCols.map(schema.fieldIndex).toArray
+    val li = lead.fold(-1) { case (src, _) => schema.fieldIndex(src) }
+    val wantRn = rnCol.isDefined
+    val width = outSchema.length
+    parted.mapPartitions { it =>
+      val buf = it.buffered
+      def keyOf(r: Row): List[Any] = List.tabulate(gi.length)(i => r.get(gi(i)))
+      var key: List[Any] = null
+      var seed: Seed = null
+      var acc: Array[Any] = null
+      var rn = 0L
+      buf.map { r =>
+        // rows arrive group-contiguous (the local sort leads with the
+        // group key): one live accumulator, reseeded per group run
+        val k = keyOf(r)
+        if (key == null || k != key) {
+          key = k
+          seed = bSeeds.value((r.getLong(mi) >>> 33, k))
+          acc = seed.sums.clone()
+          rn = seed.rows
+        }
+        // the input columns (all before __mid), then the outputs
+        val o = new Array[Any](width)
+        var j = 0
+        while (j < mi) { o(j) = r.get(j); j += 1 }
+        j = 0
+        while (j < si.length) {
+          acc(j) = plus(acc(j), r.get(si(j)))
+          o(mi + j) = acc(j)
+          j += 1
+        }
+        if (li >= 0) o(mi + si.length) =
+          if (!buf.hasNext) seed.next
+          else if (keyOf(buf.head) == k) buf.head.get(li)
+          else null
+        rn += 1
+        if (wantRn) o(width - 1) = rn
+        new GenericRow(o): Row
       }
     }(Encoders.row(outSchema))
-    out
   }
 }

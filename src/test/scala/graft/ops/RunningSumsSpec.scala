@@ -30,6 +30,14 @@ class RunningSumsSpec extends SparkSpec {
     // and the decorated frame really spans several partitions (the point)
     val nPart = r.df.select(spark_partition_id()).distinct().count()
     assert(nPart > 1, s"prefix sum ran in $nPart partition(s) — hatch not engaged")
+    // the ranked form adds row_number() under the same order
+    val rk = Ranks.runningSumsRanked(df, Seq("a" -> "ca", "b" -> "cb"), None,
+      "rn", $"id")
+    val wantRk = want.withColumn("rn",
+      row_number().over(Window.orderBy($"id")).cast("long"))
+    assert(rk.df.exceptAll(wantRk).isEmpty && wantRk.exceptAll(rk.df).isEmpty,
+      "runningSumsRanked's rank diverged from row_number()")
+    assert(rk.totals == r.totals && rk.rows == 1000L)
   }
 
   test("lead boundaries patch across range partitions (incl. global last)") {
@@ -148,7 +156,10 @@ class RunningSumsSpec extends SparkSpec {
   test("runningDecimalSumsBy == decimal sum OVER (PARTITION BY g ORDER BY v)") {
     val df = spark.range(700).select($"id",
       ($"id" % 3).cast("string").as("g"),
-      (($"id" * 13 % 97).cast("decimal(18,6)") / 7).cast("decimal(18,6)")
+      // null weights add 0 (no group starts with one, so the window
+      // sum is never NULL)
+      when($"id" % 19 === 5, lit(null).cast("decimal(18,6)")).otherwise(
+        (($"id" * 13 % 97).cast("decimal(18,6)") / 7).cast("decimal(18,6)"))
         .as("w"))
     val got = Ranks.runningDecimalSumsBy(df, Seq("g"),
       Seq("w" -> "cw"), $"id")
@@ -192,6 +203,48 @@ class RunningSumsSpec extends SparkSpec {
         "y", "lt", "le", $"v")
     }
     assert(e2.getMessage.contains("__val"))
+    // output names must be free too: a clash would otherwise surface as
+    // a duplicate column (sums) or silently replace the caller's column
+    // (ranks)
+    val vcc = Seq((1L, 2L, 3L)).toDF("v", "c", "cum")
+    val clashes = Seq[(String, () => Any)](
+      "cum" -> (() => Ranks.runningSums(vcc, Seq("c" -> "cum"), None, $"v")),
+      "cum" -> (() => Ranks.runningSumsBy(vcc, Seq("v"), Seq("c" -> "cum"), $"c")),
+      "c" -> (() => Ranks.runningLeadBy(vcc, Seq("v"), "cum" -> "c", $"cum")),
+      "c" -> (() => Ranks.withRowNumber(vcc, "c", $"v")),
+      "cum" -> (() => Ranks.withNtile(vcc, "cum", 4, $"v")),
+      "v" -> (() => Ranks.runningMaxByValue(vcc, "c", "lt", "v", $"v")))
+    clashes.foreach { case (name, call) =>
+      val e3 = intercept[IllegalArgumentException](call())
+      assert(e3.getMessage.contains(s"'$name'"), e3.getMessage)
+    }
+  }
+
+  /** true when `e` or one of its causes reports an arithmetic overflow */
+  private def overflowed(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow"))
+
+  test("Long prefix sums throw on overflow, as ANSI sum does") {
+    // 400 × 2^55 passes Long.MaxValue (2^63 − 1) at row 256, while each
+    // of the 4 range partitions' partial sums stays in range: only the
+    // offset scan, the walk and the grand total can see the overflow
+    val df = spark.range(400).select($"id".as("v"), lit(1L << 55).as("c"))
+    val e = intercept[Exception] {
+      Ranks.runningSums(df, Seq("c" -> "cum"), None, $"v").df.collect()
+    }
+    assert(overflowed(e), e.toString)
+  }
+
+  test("grouped Long prefix sums throw on overflow, as ANSI sum does") {
+    // group g's 396 rows overflow across partitions; group h's 4 do not
+    val df = spark.range(400).select(
+      when($"id" < 396, "g").otherwise("h").as("g"), $"id".as("v"),
+      lit(1L << 55).as("c"))
+    val e = intercept[Exception] {
+      Ranks.runningSumsBy(df, Seq("g"), Seq("c" -> "cum"), $"v").collect()
+    }
+    assert(overflowed(e), e.toString)
   }
 
   test("runningMaxByValue == RANGE-frame window maxima, ties included/excluded") {

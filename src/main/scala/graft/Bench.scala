@@ -1,5 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one registry runner: an untimed warm pass at sf0.001, then
+  * `SPARK_GRAFT_BENCH_RUNS` (default 3) timed passes at
+  * `SPARK_GRAFT_SF_DIR`, and the per-query medians as one stdout JSON line.
+  * An optional first argument selects queries by comma-separated name
+  * prefixes (`runMain graft.Bench q156,q157`); without it every query runs.
+  *
+  * `bench_detail.json` holds every median (`queries`), the queries that
+  * threw (`failed`), each timed call's construct and action seconds
+  * (`calls`) and, per pass, the JVM and block-manager counters read after
+  * its clock stops (`passes`). */
 object Bench {
   /** Small fixed subset printed inline in the stdout JSON line so the
     * driver's `queries` schema stays populated without the line growing
@@ -10,36 +22,48 @@ object Bench {
     "q01", "q25", "q28", "q30", "q36", "q40", "q68", "q103", "q124",
     "q153", "q156", "q360", "q369", "q382")
 
+  /** One timed call: seconds in `fn(spark, dir)` (construction, including
+    * any eager sub-jobs) and in its `count()`, and what either threw. */
+  private[graft] final case class Call(constructSec: Double, actionSec: Double,
+      error: Option[Throwable]) {
+    def sec: Double = constructSec + actionSec
+    def ok: Boolean = error.isEmpty
+    def json: String =
+      s"""{"construct_s":${fmt(constructSec)},"action_s":${fmt(actionSec)},"ok":$ok""" +
+        error.fold("")(e => ",\"error\":" + SparkEntry.jsonString(String.valueOf(e).take(400))) + "}"
+  }
+
+  private[graft] def timed(spark: SparkSession, dir: String,
+      fn: (SparkSession, String) => DataFrame): Call = {
+    def since(t: Long) = (System.nanoTime() - t) / 1e9
+    val t0 = System.nanoTime()
+    val built = try Right(fn(spark, dir)) catch { case e: Throwable => Left(e) }
+    val construct = since(t0)
+    built.fold(e => Call(construct, 0.0, Some(e)), { df =>
+      val t1 = System.nanoTime()
+      try { df.count(); Call(construct, since(t1), None) }
+      catch { case e: Throwable => Call(construct, since(t1), Some(e)) }
+    })
+  }
+
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.build(Session.cpus(4))
-    // Optional shard "i/n" (e.g. "0/4"): time only every n-th query by
-    // sorted index — lets ad-hoc sweeps at bigger SFs run in bounded
-    // chunks. The driver never sets it, so the official artifact always
-    // covers the full registry.
-    val shard = sys.env.get("SPARK_GRAFT_BENCH_SHARD").flatMap { v =>
-      val p = v.split("/")
-      scala.util.Try((p(0).trim.toInt, p(1).trim.toInt)).toOption
-    }
     // a renamed headline query must fail LOUDLY here, not silently thin
     // the driver-visible `queries` field (jsonLine flatMaps over prefixes)
     val prefixes = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
     require(headline.forall(prefixes.contains),
       s"headline queries missing from registry: " +
         headline.filterNot(prefixes.contains).mkString(", "))
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val names = shard match {
-      case Some((i, n)) => all.zipWithIndex.collect { case (q, j) if j % n == i => q }
-      case None => all
-    }
+    val keep = SparkEntry.namePrefixes(args.headOption)
+    val names = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
+    require(names.nonEmpty, s"no registry query matches ${args.head}")
     // Untimed warm pass at the smallest SF: pays JVM/codegen/parquet-footer
     // session overhead without pre-computing any timed work; the cache is
     // cleared so persisted intermediates don't leak into the timed pass.
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
+    names.foreach { case (_, fn) => timed(spark, warmDir, fn) }
     spark.catalog.clearCache()
     // Median of n timed passes per query: a single pass is hostage to host
     // load (round-2's driver capture read 46.6s for a 26s suite); medians
@@ -69,42 +93,56 @@ object Bench {
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(1500.0)
     def elapsed(): Double = (System.nanoTime() - tStart) / 1e9
-    val samples = scala.collection.mutable.ListBuffer.empty[Map[String, Double]]
-    var pass = 0
+    val samples = scala.collection.mutable.ListBuffer.empty[Map[String, Call]]
+    val passes = scala.collection.mutable.ListBuffer.empty[String]
+    // A query that threw has no time: medians run over its ok calls only,
+    // and a query with none drops out of `queries`, the total and n_queries.
+    def medians(): Seq[(String, Double)] = names.flatMap { case (n, _) =>
+      val ok = samples.toSeq.map(_(n)).filter(_.ok).map(_.sec)
+      if (ok.isEmpty) None else Some(n -> median(ok))
+    }
     var lastPassSec = 0.0
-    while (pass < runs &&
-        (pass == 0 || elapsed() + lastPassSec * 1.1 < budgetSec)) {
+    while (samples.size < runs &&
+        (samples.isEmpty || elapsed() + lastPassSec * 1.1 < budgetSec)) {
       spark.catalog.clearCache()
+      val pass = samples.size + 1
+      val gc0 = gc()
       val tp = System.nanoTime()
       val sofar = scala.collection.mutable.ListBuffer.empty[(String, Double)]
       samples += names.zipWithIndex.map { case ((name, fn), j) =>
-        val tq = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val sec = (System.nanoTime() - tq) / 1e9
-        if (pass == 0) {
-          sofar += (name -> sec)
+        val call = timed(spark, sfDir, fn)
+        call.error.foreach(e => System.err.println(
+          s"[bench] FAILED $name (pass $pass): " + String.valueOf(e).replace('\n', ' ')))
+        if (pass == 1) {
+          if (call.ok) sofar += (name -> call.sec)
           if ((j + 1) % 60 == 0 && j + 1 < names.size) {
             println(jsonLine(sofar.toSeq, sfDir, 1, partial = true))
             System.out.flush()
           }
         }
-        name -> sec
+        name -> call
       }.toMap
       lastPassSec = (System.nanoTime() - tp) / 1e9
-      pass += 1
-      if (pass < runs) {
-        val meds = names.map { case (n, _) => n -> median(samples.toSeq.map(_(n))) }
-        println(jsonLine(meds, sfDir, samples.size))
+      passes += passRecord(spark, lastPassSec, gc0)
+      if (samples.size < runs) {
+        println(jsonLine(medians(), sfDir, samples.size))
         System.out.flush()
       }
     }
-    val results = names.map { case (name, _) => name -> median(samples.toSeq.map(_(name))) }
+    val results = medians()
     try {
       val detail = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+      val failed = names.map(_._1)
+        .filter(n => samples.exists(!_(n).ok))
+        .map("\"" + _ + "\"").mkString("[", ",", "]")
+      val calls = names.map { case (n, _) =>
+        "\"" + n + "\":" + samples.map(_(n).json).mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
       val w = new java.io.PrintWriter("bench_detail.json", "UTF-8")
-      try w.println(s"""{"total":${fmt(total)},"n_queries":${results.size},"n_runs":${samples.size},"queries":$detail,"sf":"$sfDir"}""")
+      try w.println(s"""{"total":${fmt(total)},"n_queries":${results.size},"n_runs":${samples.size},"queries":$detail,"sf":"$sfDir",""" +
+        s""""failed":$failed,"passes":${passes.mkString("[", ",", "]")},"calls":$calls}""")
       finally w.close()
     } catch { case _: Throwable => () } // detail file is best-effort
     spark.stop()
@@ -112,6 +150,28 @@ object Bench {
     // log noise can interleave after it — the driver parses this line.
     println(jsonLine(results, sfDir, samples.size))
     System.out.flush()
+  }
+
+  /** Cumulative JVM GC (count, ms). */
+  private def gc(): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val gcs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+    (gcs.map(_.getCollectionCount).sum, gcs.map(_.getCollectionTime).sum)
+  }
+
+  /** One pass's record, read after its clock stops: wall seconds, GC count
+    * and ms since `gc0`, and what the pass left behind — persistent RDDs
+    * still registered (localCheckpoint blocks wait for GC + ContextCleaner;
+    * `clearCache()` does not drop them), block-manager storage and JVM
+    * heap used, in bytes. */
+  private def passRecord(spark: SparkSession, sec: Double, gc0: (Long, Long)): String = {
+    val (count, ms) = gc()
+    val storage = org.apache.spark.SparkEnv.get.blockManager.master
+      .getMemoryStatus.values.map { case (max, free) => max - free }.sum
+    val heap = Runtime.getRuntime
+    s"""{"sec":${fmt(sec)},"gc_count":${count - gc0._1},"gc_ms":${ms - gc0._2},""" +
+      s""""persistent_rdds":${spark.sparkContext.getPersistentRDDs.size},""" +
+      s""""storage_bytes":$storage,"heap_bytes":${heap.totalMemory - heap.freeMemory}}"""
   }
 
   // Locale.ROOT pins '.' as the decimal separator regardless of host locale.
@@ -128,7 +188,7 @@ object Bench {
     * registry size) plus a fixed 14-query headline subset so the `queries`
     * field stays schema-compatible; the full per-query map lives in
     * bench_detail.json. */
-  private def jsonLine(results: Seq[(String, Double)], sfDir: String,
+  private[graft] def jsonLine(results: Seq[(String, Double)], sfDir: String,
       nRuns: Int, partial: Boolean = false): String = {
     val byPrefix = results.map { case (k, v) => k.takeWhile(_ != '_') -> v }.toMap
     val qs = headline.flatMap(p => byPrefix.get(p).map(v => "\"" + p + "\":" + fmt(v)))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the `graft.*` entry points (Bench, Verify,
-  * Explain, ExplainQ, PhaseProbe, PerfProbe, PerfDiag) run on: `cpus`
+  * Explain) run on: `cpus`
   * task threads and as many shuffle partitions, UTC, no UI, a
   * registry-sized codegen cache, and ERROR logging without the benign
   * checkpoint-release traces. */

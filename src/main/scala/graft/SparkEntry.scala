@@ -17,6 +17,28 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (n, q) => n -> q.fn }.toMap
 
+  /** Name filter for a comma-separated list of query-name prefixes, as
+    * Bench's first and Verify's third argument take it; no list keeps
+    * every query. */
+  private[graft] def namePrefixes(arg: Option[String]): String => Boolean =
+    arg.fold((_: String) => true) { a =>
+      val ps = a.split(",").map(_.trim)
+      n => ps.exists(n.startsWith)
+    }
+
+  /** JSON string literal: quote, backslash and every control character
+    * escaped, so oracle SQL or an exception message cannot
+    * break the reader's parse. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -8,8 +8,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * JSON line to outDir/progress.jsonl — a mid-run kill leaves the oracle
   * map plus N parseable per-query records (name, ok, rows, sec) on disk,
   * never an empty artifact. Queries run on a small thread pool
-  * (SPARK_GRAFT_VERIFY_PAR, default 8): they are independent reads, the
-  * shared logreg fit cache is a ConcurrentHashMap.computeIfAbsent, and
+  * (SPARK_GRAFT_VERIFY_PAR, default 8): they are independent reads, and
   * overlapping driver-side planning with execution is most of the wall
   * saving at sf0.01 where per-query runtime is dominated by fixed cost. */
 object Verify {
@@ -17,26 +16,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name-prefix filter for fast local
     // iteration (the driver always calls with two args = full dump)
-    val keep: String => Boolean = args.lift(2) match {
-      case Some(pfx) => { val ps = pfx.split(","); n => ps.exists(n.startsWith) }
-      case None => _ => true
-    }
+    val keep = SparkEntry.namePrefixes(args.lift(2))
     val spark = Session.build(Session.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import SparkEntry.{jsonString => q}
 
     // oracle map FIRST: a timeout after this point still leaves the
     // driver everything it needs to grade whatever parquet landed.

@@ -117,13 +117,6 @@ object Matching {
         concat_ws(NulSep, texts: _*), entries)
     else literalFirstMatch(texts, entries)
 
-  /** Adaptive longest-match (same switch). */
-  def longestMatchAuto(text: Column, entries: Seq[String],
-      automatonThreshold: Int = 12): Column =
-    if (entries.size >= automatonThreshold)
-      graft.functions.MultiContains.multiContainsLongest(text, entries)
-    else literalLongestMatch(text, entries)
-
   /** K2 `matching_program_individual` (py:494-530): re-run the KB match
     * for only the rows satisfying `cond` (e.g. a remark class or brand the
     * KB just learned about), leaving every other row untouched. Columns

@@ -38,7 +38,7 @@ object Outliers {
     * (brand, model, month) instead of all-time.
     *
     * Under documented INTENT this is exactly `markOutliers` with the term
-    * appended to the keys. With `compat.termOutlierLowerBoundBug` the
+    * appended to the keys. With `compat.referenceBugs` the
     * reference's §2.12-4 behavior is reproduced: the upper bound compares
     * against the term-scoped median but the lower bound against the
     * all-terms `keys` median (py:304,312 omit the term filter), a second
@@ -54,7 +54,7 @@ object Outliers {
       hi: Double = 1.2,
       compat: CompatFlags = CompatFlags.intent): DataFrame =
     mark(df, valueCol, keys :+ termCol,
-      if (compat.termOutlierLowerBoundBug) keys else keys :+ termCol,
+      if (compat.referenceBugs) keys else keys :+ termCol,
       unknownCond, outCol, lo, hi)
 
   /** `outCol` against the median of the `keys` group (unknown test and

@@ -4,6 +4,29 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Bit-level compatibility switch for the reference's BUGGY behaviors
+  * (SURVEY §2.12 — this library implements the documented INTENT by
+  * default; use `bugCompatible` only to reproduce the reference's buggy
+  * output byte-for-byte, e.g. when diffing against a historical export). */
+final case class CompatFlags(
+    /** Reproduce all three together:
+      * §2.12-1: `search_regex` computes capacities for starting_point 1
+      * (and 2) but never assigns them (missing `df.at`);
+      * §2.12-2: the `capcacity` typo makes starting_point −2 crash; rows
+      * that would hit it end with no capacity;
+      * §2.12-4: in term-scoped outlier marking (py:287-316, term=True) the
+      * LOWER-bound test omits the term filter (py:304,312): the upper bound
+      * compares against the term-scoped median, the lower against the
+      * all-terms (brand, model) median. */
+    referenceBugs: Boolean)
+
+object CompatFlags {
+  /** Documented intent (cells 19/28/43/49) — the default everywhere. */
+  val intent: CompatFlags = CompatFlags(referenceBugs = false)
+  /** Reproduce the reference's actual buggy assignments. */
+  val bugCompatible: CompatFlags = CompatFlags(referenceBugs = true)
+}
+
 /** Regex-knowledge-base matching (SURVEY.md §2.4 J3/J4, §2.3 F6).
   *
   * The reference loops every unmatched row over every pattern with
@@ -14,32 +37,6 @@ import org.apache.spark.sql.functions._
   * pattern table is sorted so equal patterns are adjacent), then a window
   * tie-break on the longest extracted match.
   */
-/** Bit-level compatibility switches for the reference's BUGGY behaviors
-  * (SURVEY §2.12 — this library implements the documented INTENT by
-  * default; flip a flag only to reproduce the reference's buggy output
-  * byte-for-byte, e.g. when diffing against a historical export). */
-final case class CompatFlags(
-    /** §2.12-1: `search_regex` computes capacities for starting_point 1
-      * (and 2) but never assigns them (missing `df.at`). */
-    regexCapacityAssignBug: Boolean = false,
-    /** §2.12-2: the `capcacity` typo makes starting_point −2 crash; rows
-      * that would hit it end with no capacity. */
-    regexCapacityTypoBug: Boolean = false,
-    /** §2.12-4: in term-scoped outlier marking (py:287-316, term=True) the
-      * LOWER-bound test omits the term filter (py:304,312): the upper bound
-      * compares against the term-scoped median, the lower against the
-      * all-terms (brand, model) median. */
-    termOutlierLowerBoundBug: Boolean = false)
-
-object CompatFlags {
-  /** Documented intent (cells 19/28/43/49) — the default everywhere. */
-  val intent: CompatFlags = CompatFlags()
-  /** Reproduce the reference's actual buggy assignments. */
-  val bugCompatible: CompatFlags =
-    CompatFlags(regexCapacityAssignBug = true, regexCapacityTypoBug = true,
-      termOutlierLowerBoundBug = true)
-}
-
 object RegexMatch {
 
   /** All matches of (column-side) `pattern` in `text`, longest first.
@@ -154,10 +151,10 @@ object RegexMatch {
     val drop1 = substring(numText, 2, 1000).cast("double")
     val drop2 = substring(numText, 3, 1000).cast("double")
     // §2.12-1/-2: the reference computes but never assigns for codes 1/2,
-    // and code -2 raises (the `capcacity` typo) — under the bug flags those
+    // and code -2 raises (the `capcacity` typo) — under the bug flag those
     // codes contribute nothing, exactly like the buggy original
-    val c1 = if (compat.regexCapacityAssignBug) lit(null).cast("double") else drop1 / 10
-    val cm2 = if (compat.regexCapacityTypoBug) lit(null).cast("double") else drop2
+    val c1 = if (compat.referenceBugs) lit(null).cast("double") else drop1 / 10
+    val cm2 = if (compat.referenceBugs) lit(null).cast("double") else drop2
     when(startingPoint === 0, n / 10)
       .when(startingPoint === 1, c1)
       .when(startingPoint === 2, lit(null).cast("double"))

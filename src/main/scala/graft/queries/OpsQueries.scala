@@ -24,16 +24,6 @@ object OpsQueries {
     * is built over). */
   private val shapleyChannels = Seq("click", "error", "signup", "view")
 
-  /** One logreg fit per (dataset dir, label) per JVM. The calibration/
-    * causal family (q156/q157/q216/q236/q356/q370/q382/q389/q391) replays
-    * the SAME deterministic full-batch GD fit — 3 iterations × (map pass
-    * + ≤65-row collect) each — before its own scoring/audit pass; fitting
-    * once per registry run amortises ~8 redundant fits (~25 s of the
-    * clean sf0.1 suite). Caching cannot change any result: the fit is a
-    * pure function of (data, label, buckets, iters, rate) — engine-exact
-    * integer-nanounit gradient sums, no RNG — so the cached weights are
-    * bit-identical to a fresh fit, and the key includes every varying
-    * input (the remaining params are literals fixed at 64/3/0.02 below). */
   /** q336's Poisson(1) draw k for resample j from the row's seeded base
     * hash — the former post-explode expression, applied per draw inside
     * one aggregate instead. */
@@ -42,21 +32,6 @@ object OpsQueries {
       lit(1152921504606846976.0)
     when(u < 0.367879441171, 0).when(u < 0.735758882343, 1)
       .when(u < 0.919698602929, 2).otherwise(3)
-  }
-
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Double)]]()
-  private def cachedFit(s: org.apache.spark.sql.SparkSession, dir: String,
-      labelKey: String): Seq[(Int, Double)] = {
-    import s.implicits._
-    val label = labelKey match {
-      case "en" => $"lang" === "en"
-      case "src" => $"source".isin("src0", "src1", "src2", "src3", "src4")
-      case "len300" => $"n_chars" >= 300
-    }
-    fitCache.computeIfAbsent(s"$dir|$labelKey", _ =>
-      Classifier.logregFit(Tables.documents(s, dir), "doc_id", "text",
-        label, buckets = 64, iters = 3, rate = 0.02))
   }
 
   /** q377 oracle: the Markov removal-effect replay — path transitions,
@@ -3958,11 +3933,17 @@ object OpsQueries {
     // Full-batch logistic regression on the q153 hashed-bigram feature
     // space, label = lang='en'; 3 GD iterations replayed by the oracle
     // (ordered margin folds, integer nano-unit gradients, identical IEEE
-    // weight updates). Output: 64 feature weights + the bias.
+    // weight updates). Output: 64 feature weights + the bias. The
+    // calibration/causal family (q157 q216 q236 q356 q370 q382 q389 q391
+    // q448 q460 q462 q463) replays the same deterministic fit — 3
+    // iterations × (map pass + ≤65-row collect), a pure function of (data,
+    // label, buckets, iters, rate) — before its own scoring pass. Each
+    // query runs its own fit: none reuses another query's or run's result.
     "q156_logreg_fit" -> Q(
       (s, dir) => {
         import s.implicits._
-        cachedFit(s, dir, "en").toDF("b", "w").orderBy($"b")
+        Classifier.logregFit(Tables.documents(s, dir), "doc_id", "text",
+          $"lang" === "en").toDF("b", "w").orderBy($"b")
       },
       Some(LogregOracle.fitSql("lang = 'en'", buckets = 64, iters = 3,
         rate = "0.02::DOUBLE"))),
@@ -3974,7 +3955,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         Classifier.logregScore(docs, "doc_id", "text", $"lang" === "en", w)
           .orderBy($"doc_id")
       },
@@ -5810,7 +5791,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         Classifier.calibrationCurve(scored, "p", "is_target")
@@ -6317,7 +6298,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         scored.join(docs.select($"doc_id", $"lang"), "doc_id")
@@ -10853,7 +10834,7 @@ object OpsQueries {
         import s.implicits._
         val docs = Tables.documents(s, dir)
         val treat = $"source".isin("src0", "src1", "src2", "src3", "src4")
-        val w = cachedFit(s, dir, "src")
+        val w = Classifier.logregFit(docs, "doc_id", "text", treat)
         val scored = Classifier.logregScore(docs, "doc_id", "text", treat, w)
           .join(docs.select($"doc_id", $"n_chars"), "doc_id")
         Classifier.ipwEffect(scored, "p", $"is_target", $"n_chars" >= 300)
@@ -11224,7 +11205,7 @@ object OpsQueries {
         import s.implicits._
         val docs = Tables.documents(s, dir)
         val label = $"n_chars" >= 300
-        val w = cachedFit(s, dir, "len300")
+        val w = Classifier.logregFit(docs, "doc_id", "text", label)
         val scored = Classifier.logregScore(docs, "doc_id", "text", label, w)
           .join(docs.select($"doc_id", $"lang"), "doc_id")
         Classifier.fairnessAudit(scored, "lang", $"pred", $"is_target")
@@ -11597,7 +11578,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         Classifier.expectedCalibrationError(scored, "p", $"is_target")
@@ -11615,7 +11596,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         Classifier.brierDecomposition(scored, "p", $"is_target")
@@ -12133,7 +12114,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         // 256 bins: the 3-iter fit's probabilities cluster inside one
@@ -12191,7 +12172,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         val j = scored.join(docs.select($"doc_id", $"n_chars"), "doc_id")
@@ -12206,7 +12187,7 @@ object OpsQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val w = cachedFit(s, dir, "en")
+        val w = Classifier.logregFit(docs, "doc_id", "text", $"lang" === "en")
         val scored = Classifier.logregScore(docs, "doc_id", "text",
           $"lang" === "en", w)
         val j = scored.join(docs.select($"doc_id", $"n_chars", $"text"),
@@ -13538,7 +13519,7 @@ object OpsQueries {
         import s.implicits._
         val docs = Tables.documents(s, dir)
         val treat = $"source".isin("src0", "src1", "src2", "src3", "src4")
-        val w = cachedFit(s, dir, "src")
+        val w = Classifier.logregFit(docs, "doc_id", "text", treat)
         val scored = Classifier.logregScore(docs, "doc_id", "text", treat, w)
         Classifier.propensityOverlap(scored, "p", $"is_target")
           .orderBy($"treated")
@@ -13589,7 +13570,7 @@ object OpsQueries {
         import s.implicits._
         val docs = Tables.documents(s, dir)
         val treat = $"source".isin("src0", "src1", "src2", "src3", "src4")
-        val w = cachedFit(s, dir, "src")
+        val w = Classifier.logregFit(docs, "doc_id", "text", treat)
         val scored = Classifier.logregScore(docs, "doc_id", "text", treat, w)
           .join(docs.select($"doc_id", $"lang", $"n_chars"), "doc_id")
         val y = $"n_chars" >= 300

@@ -19,9 +19,8 @@ object Session {
       // registry generates thousands of distinct codegen units, so every
       // pass evicts and Janino-recompiles the lot. Scale-neutral (the
       // cache is per-JVM source-keyed compilation, identical benefit on
-      // any cluster executor); env-overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      // any cluster executor).
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     // ERROR, not WARN: cache/checkpoint WARN lines printed after Bench's
     // JSON line would push it out of the stdout tail its reader parses

@@ -4,13 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Containment-join matching (SURVEY.md §2.4 J1/J2).
+/** Containment matching (SURVEY.md §2.4 J1/J2).
   *
   * The reference hand-rolls these as O(N·dims) iterrows loops
-  * (`data_processing_program_20240520.py:75-107`); here they are broadcast
-  * theta-joins plus a window tie-break, so the fact side never shuffles:
-  * the dimension is broadcast to every executor and the only exchange is
-  * the (partition-local) window over the fact row id.
+  * (`data_processing_program_20240520.py:75-107`). The customs KB match
+  * (`Pipeline.matchKnowledgeBase`, `rematchIndividual`) uses only the
+  * literal-expression path below: the KB is collected at plan time and
+  * compiled into array expressions, so the fact side never shuffles.
+  * `bestMatchJoin` is the generic broadcast theta-join + window tie-break,
+  * used for the weight band lookup (`Lookups.inferFromWeight`).
   */
 object Matching {
 
@@ -48,29 +50,6 @@ object Matching {
       .drop("__rn")
       .select(fact.columns.map(col) ++ keep.map { case (from, to) => col(from).as(to) }: _*)
   }
-
-  /** First-match-in-reference-order containment join (J1: reference picks the
-    * FIRST brand in df_ref row order, py:88). `dim` must carry `orderCol`. */
-  def firstMatchJoin(
-      fact: DataFrame,
-      idCols: Seq[String],
-      dim: DataFrame,
-      cond: Column,
-      orderCol: String,
-      keep: Map[String, String]): DataFrame =
-    bestMatchJoin(fact, idCols, dim, cond, Seq(col(orderCol).asc_nulls_last), keep)
-
-  /** Longest-string containment join (J2: reference keeps the longest model,
-    * py:99; equal lengths fall back to `matchCol` ascending for determinism). */
-  def longestMatchJoin(
-      fact: DataFrame,
-      idCols: Seq[String],
-      dim: DataFrame,
-      cond: Column,
-      matchCol: String,
-      keep: Map[String, String]): DataFrame =
-    bestMatchJoin(fact, idCols, dim, cond,
-      Seq(length(col(matchCol)).desc_nulls_last, col(matchCol).asc_nulls_last), keep)
 
   // ─── Shuffle-free literal-expression path ─────────────────────────────
   //

@@ -76,31 +76,4 @@ object Outliers {
       .otherwise("no")
     Project.select(meds, keys ++ df.columns.filterNot(keys.contains), Seq(outCol -> flag))
   }
-
-  /** Scale variant: approximate median via `percentile_approx` (a
-    * TypedImperativeAggregate with map-side partial merge — unlike exact
-    * `percentile` it never collects a full value list per group). At 100TB
-    * with heavy-hitter groups (SANY ≈ 17% of rows in the golden output)
-    * this is the one to run; `accuracy` trades error for state size. */
-  def markOutliersApprox(
-      df: DataFrame,
-      valueCol: String,
-      keys: Seq[String],
-      unknownCond: Column,
-      outCol: String = "outliers",
-      lo: Double = 0.8,
-      hi: Double = 1.2,
-      accuracy: Int = 10000): DataFrame = {
-    val med = df
-      .filter(!unknownCond && col(valueCol).isNotNull)
-      .groupBy(keys.map(col): _*)
-      .agg(percentile_approx(col(valueCol), lit(0.5), lit(accuracy)).as("__median"))
-    df.join(med, keys, "left")
-      .withColumn(outCol,
-        when(unknownCond || col("__median").isNull, "unknown")
-          .when(col(valueCol) >= col("__median") * hi ||
-            col(valueCol) <= col("__median") * lo, "yes")
-          .otherwise("no"))
-      .drop("__median")
-  }
 }

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * Every stage is a pure `DataFrame => DataFrame` that sets its columns in
   * one projection per dependency level (`Project`); Catalyst sees the whole
   * tree, so filters push to the scan and all dimension joins broadcast.
+  * The two knowledge-base stages (2: model KB, 7: regex KB) collect their
+  * KB at plan time and match it with literal expressions, at any KB size.
   * Shuffles: the two window aggregates, backward tagging over (brand, type)
   * and the outlier median over (brand, model) — everything else is
   * map-side. A window puts a whole group in one task, so a heavy-hitter
@@ -85,12 +87,11 @@ object Pipeline {
   /** Stage 2 (J1+J2, py:61-115): brand containment match (first in KB
     * order), then model containment match (longest), remark provenance.
     *
-    * Uses the shuffle-free literal-expression path (Matching §expr): the
-    * model KB is driver-small (hundreds of rows — the same assumption a
-    * broadcast join makes), so the whole match compiles to codegen'd
-    * array expressions and the fact table is NEVER shuffled. For a KB too
-    * big to collect, `matchKnowledgeBaseRelational` is the join+window
-    * fallback with identical semantics. */
+    * The KB is collected once at plan time and the whole match compiles
+    * to codegen'd array expressions (Matching §expr): no join, no window,
+    * the fact table is never shuffled. Collecting is the same bound a
+    * broadcast join puts on the KB, which it also gathers on the driver
+    * first. */
   def matchKnowledgeBase(df: DataFrame, modelKbRaw: DataFrame): DataFrame = {
     val kb = KnowledgeBase.prepareModelKb(modelKbRaw)
       .select("brand", "model", "model_ref", "capacity", "type", "hp").collect()
@@ -118,33 +119,6 @@ object Pipeline {
       "capacity" -> col("__info._2"),
       "type" -> coalesce(col("__info._3"), lit(UNK)),
       "hp" -> col("__info._4"))
-  }
-
-  /** Relational variant of stage 2 for KBs too large to collect: broadcast
-    * theta-joins + window tie-breaks (one fact shuffle per tie-break). */
-  def matchKnowledgeBaseRelational(df: DataFrame, modelKbRaw: DataFrame): DataFrame = {
-    val kb = KnowledgeBase.prepareModelKb(modelKbRaw)
-    val brands = kb.select(col("brand").as("kb_brand"), col("ref_order"))
-      .groupBy("kb_brand").agg(min("ref_order").as("brand_order"))
-    val withBrand = Matching.firstMatchJoin(df, Seq("__row_id"), brands,
-      c("description2").contains(col("kb_brand")) ||
-        col("supplier_norm").contains(col("kb_brand")),
-      "brand_order", Map("kb_brand" -> "brand"))
-    val models = kb.select(col("brand").as("kb_brand"), col("model"),
-      col("model_ref"), col("capacity").as("kb_capacity"),
-      col("type").as("kb_type"), col("hp").as("kb_hp"))
-    val withModel = Matching.longestMatchJoin(withBrand, Seq("__row_id"), models,
-      col("brand") === col("kb_brand") && c("description2").contains(col("model_ref")),
-      "model_ref",
-      Map("model" -> "model", "kb_capacity" -> "capacity",
-        "kb_type" -> "type", "kb_hp" -> "hp"))
-    Project(withModel)(
-      "remark" -> when(col("brand").isNull, Remark.noMatch)
-        .when(col("model").isNull, Remark.brandNoModel)
-        .otherwise(Remark.fully),
-      "brand" -> coalesce(col("brand"), lit(UNK)),
-      "model" -> coalesce(col("model"), lit(UNK)),
-      "type" -> coalesce(col("type"), lit(UNK)))
   }
 
   /** Irrelevant-keyword vocabulary (P3, py:119-125 — excerpt of the 32). */
@@ -186,11 +160,13 @@ object Pipeline {
     * rows; brand-scoped when the brand is known, global otherwise; longest
     * findall match wins; capacity decoded per starting_point.
     *
-    * Literal fast path: the regex KB is plan-time small, so every pattern
-    * becomes a LITERAL regex (compiled once in codegen) and the winner is
-    * picked with a `greatest` struct fold — zero joins, zero shuffles.
-    * Only the winning pattern's capacity_regex is evaluated (lazy `when`
-    * chain). `regexPassRelational` is the big-KB fallback. */
+    * The regex KB is collected once at plan time (as for stage 2): every
+    * pattern becomes a literal regex inside one fused expression
+    * (`RegexMatch.literalRegexBest`), which returns the winner's ordinal —
+    * zero joins, zero shuffles. Brand, category, starting point and
+    * capacity regex are looked up by that ordinal in literal arrays, so
+    * the plan grows by one array element per pattern and the pass is the
+    * same at any KB size. Only a matched row runs its capacity regex. */
   def regexPass(df: DataFrame, regexKb: DataFrame,
       compat: CompatFlags = CompatFlags.intent): DataFrame = {
     val rows = regexKb.select("brand", "model_regex", "capacity_regex", "category", "starting_point")
@@ -198,10 +174,6 @@ object Pipeline {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
       .sortBy { case (_, pat, _, _, _) => (-pat.length, pat) } // longer patterns first (O2)
     if (rows.isEmpty) return df // no regex KB → stage is a no-op
-    // big pattern tables would explode the literal plan (O(patterns) nodes
-    // re-analyzed per execution — see PERF.md round 2); the relational
-    // broadcast-rlike join is the right shape past this size
-    if (rows.length > 64) return regexPassRelational(df, regexKb, compat)
     val todoCond = col("remark").isin(Remark.brandNoModel, Remark.noMatch)
     val patterns = rows.map { case (b, pat, _, _, _) =>
       (pat, -pat.length, col("brand") === lit(UNK) || col("brand") === lit(b))
@@ -213,12 +185,8 @@ object Pipeline {
     val rxBrand = byOrd(rows.map(r => lit(r._1)).toSeq)
     val rxCategory = byOrd(rows.map(r => lit(r._4)).toSeq)
     val rxSp = byOrd(rows.map(r => lit(r._5)).toSeq)
-    // lazy per-winner capacity extraction: only the winning branch runs
-    val rxCapNum = rows.zipWithIndex.foldLeft(lit(null).cast("string")) {
-      case (acc, ((_, _, capReg, _, _), i)) =>
-        when(ord === i, get(regexp_extract_all(c("description2"), lit(capReg), lit(1)), lit(0)))
-          .otherwise(acc)
-    }
+    val rxCapReg = byOrd(rows.map(r => lit(r._3)).toSeq)
+    val rxCapNum = get(regexp_extract_all(c("description2"), rxCapReg, lit(1)), lit(0))
     Project(df.withColumn("__rx", when(todoCond, best)), "__rx")(
       "remark" -> when(col("__rx").isNull, col("remark"))
         .when(col("brand") === UNK && col("__rx.n_matched") === 1, Remark.noBrandUniqueRegex)
@@ -233,40 +201,6 @@ object Pipeline {
         when(col("__rx").isNotNull && col("type") === UNK, rxCategory).otherwise(col("type")),
       "brand" ->
         when(col("__rx").isNotNull && col("brand") === UNK, rxBrand).otherwise(col("brand")))
-  }
-
-  /** Relational variant of stage 7 for pattern tables too large to
-    * collect: broadcast rlike theta-join + window tie-break. */
-  def regexPassRelational(df: DataFrame, regexKb: DataFrame,
-      compat: CompatFlags = CompatFlags.intent): DataFrame = {
-    val todo = df.filter(col("remark").isin(Remark.brandNoModel, Remark.noMatch))
-    val done = df.filter(!col("remark").isin(Remark.brandNoModel, Remark.noMatch))
-    val dim = regexKb.select(col("brand").as("rx_brand"), col("model_regex"),
-      col("capacity_regex"), col("category"), col("starting_point"),
-      (-length(col("model_regex"))).as("rx_priority"))
-    val scope = col("brand") === lit(UNK) || col("brand") === col("rx_brand")
-    val matched = RegexMatch.regexJoin(todo, Seq("__row_id"), "description2",
-      dim, "model_regex", scope, Some("rx_priority"),
-      Map("rx_brand" -> "rx_brand", "category" -> "rx_category",
-        "capacity_regex" -> "rx_capreg", "starting_point" -> "rx_sp"))
-    val decoded = matched.withColumn("rx_capnum",
-      when(col("matched").isNotNull,
-        get(regexp_extract_all(c("description2"), col("rx_capreg"), lit(1)), lit(0))))
-    val applied = Project(decoded,
-        "matched", "rx_brand", "rx_category", "rx_capreg", "rx_sp", "rx_capnum")(
-      "remark" -> when(col("matched").isNull, col("remark"))
-        .when(col("brand") === UNK, Remark.noBrandLongestRegex)
-        .otherwise(Remark.longestRegex),
-      "model" -> when(col("matched").isNotNull, Normalize.stripSpaces(col("matched")))
-        .otherwise(col("model")),
-      "brand" -> when(col("matched").isNotNull && col("brand") === UNK, col("rx_brand"))
-        .otherwise(col("brand")),
-      "type" -> when(col("matched").isNotNull && col("type") === UNK, col("rx_category"))
-        .otherwise(col("type")),
-      "capacity" -> when(col("matched").isNotNull && col("capacity").isNull,
-        RegexMatch.decodeCapacity(col("rx_capnum"), col("rx_sp"), compat))
-        .otherwise(col("capacity")))
-    done.unionByName(applied)
   }
 
   /** Stage 8 (B4, py:239-252): capacity from "N TONS" in the description

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Dedup.unpersistCheckpoint
+
 /** Iterative graph centrality over an edge table — the remaining graph
   * primitive next to the two connected-components variants
   * (`Dedup.connectedComponents` / `connectedComponentsStar`): PageRank
@@ -139,9 +141,6 @@ object Graph {
     ranks.select(col("id").as(idCol), col("rank").as("rank_fp"))
   }
 
-  /** Release the block-manager storage behind a localCheckpoint'ed frame
-    * (same helper the CC loops carry — Dataset.unpersist only covers
-    * cache-manager entries). */
   /** Global triangle count of an undirected graph given as CANONICAL
     * edges (src < dst, deduplicated — exactly what `Dedup.minhashPairs`
     * emits). Two equi-joins: wedges a<b<c from edge pairs sharing the
@@ -592,7 +591,4 @@ object Graph {
           col("n_vertices").cast("double") / (col("__s").cast("double") / fix), 6)
           .as("alpha"))
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Dedup.unpersistCheckpoint(df) // ONE shared release implementation
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Dedup.unpersistCheckpoint
+
 /** WordPiece-style greedy subword tokenization (Wu et al. 2016 §4.1;
   * the BERT tokenizer's inference rule) — the third tokenizer next to
   * [[Bpe]]'s merge learner and the unigram-Viterbi segmenter: given a
@@ -140,7 +142,4 @@ object Wordpiece {
           .as("single_token_share"))
     out
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Dedup.unpersistCheckpoint(df) // ONE shared release implementation
 }

@@ -109,7 +109,6 @@ object EtlQueries {
       (s, dir) => {
         import s.implicits._
         // literal-expression path: dim is plan-time small → zero shuffle
-        // (Matching.firstMatchJoin is the relational fallback, same result)
         val kws = Seq("widget", "anvil", "rod", "gear", "bolt")
         Tables.part(s, dir)
           .select($"p_partkey", $"p_name",

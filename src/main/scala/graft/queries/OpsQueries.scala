@@ -2316,15 +2316,14 @@ object OpsQueries {
       },
       Some(Q40Oracle.sql)),
 
-    // ─── the RELATIONAL KB-match path (big-KB fallback) oracle-gated ────
-    // Same semantics as the literal-expression path q40 uses; the output
-    // is a (brand, model, remark) distribution so no row identity is
-    // needed. Proves literal ≡ relational under the oracle, not just specs.
-    "q55_match_relational" -> Q(
+    // ─── stage 2 (KB match) alone, oracle-gated ────────────────────────
+    // The match stage on its own 1-in-70 slice; the output is a (brand,
+    // model, remark) distribution, so no row identity is needed.
+    "q55_match_kb" -> Q(
       (s, dir) => {
         import s.implicits._
         import graft.etl.{KnowledgeBase, Pipeline}
-        val matched = Pipeline.matchKnowledgeBaseRelational(
+        val matched = Pipeline.matchKnowledgeBase(
           Pipeline.prepare(synthCustomsFact(s, dir, every = 70)),
           KnowledgeBase.sampleModelKb(s))
         matched.groupBy($"brand", $"model", $"remark")
@@ -2333,10 +2332,8 @@ object OpsQueries {
       },
       Some(Q40Oracle.matchOnlySql(70))),
 
-    // ─── the RELATIONAL regex-pass fallback oracle-gated (as q55) ───────
-    // Its remark vocabulary is the longest-only variant (no n_matched), so
-    // the oracle uses the same CASE via Q40Oracle.regexOnlySql.
-    "q56_regex_relational" -> Q(
+    // ─── stages 2-7 through the regex pass, oracle-gated (as q55) ───────
+    "q56_regex_pass" -> Q(
       (s, dir) => {
         import s.implicits._
         import graft.etl.{KnowledgeBase, Pipeline}
@@ -2346,10 +2343,7 @@ object OpsQueries {
           .transform(Pipeline.applyTypeRules)
           .transform(Pipeline.markUsedNew)
           .transform(Pipeline.markParts)
-          // the relational pass branches its input (todo/done split): cut
-          // the lineage so the match block isn't recomputed per branch
-          .transform(_.localCheckpoint(eager = false))
-          .transform(Pipeline.regexPassRelational(_, KnowledgeBase.sampleRegexKb(s)))
+          .transform(Pipeline.regexPass(_, KnowledgeBase.sampleRegexKb(s)))
           .groupBy($"brand", $"model", $"remark").agg(count(lit(1)).as("n"))
           .orderBy($"brand", $"model", $"remark")
       },

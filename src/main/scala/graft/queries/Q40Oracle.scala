@@ -153,32 +153,19 @@ object Q40Oracle {
   }
 
   /** Oracle for q55: the match stage alone as a (brand, model, remark)
-    * distribution — row-identity-free, so it also gates the RELATIONAL
-    * match path, whose Spark output has no stable row ids. */
+    * distribution. */
   def matchOnlySql(every: Int): String =
     matchPrefix(every) + """
       |SELECT brand, model, remark, count(*) AS n
       |FROM s2 GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
 
-  /** Prefix through the regex pass (fact0..s7). `uniqueRemarks` selects
-    * the literal path's remark vocabulary (distinguishes unique-vs-longest
-    * via n_matched) or the relational fallback's (longest-only). */
-  private def throughS7(uniqueRemarks: Boolean, every: Int = 7): String = {
+  /** Prefix through the regex pass (fact0..s7). The remark tells a unique
+    * regex match from the longest of several via n_matched. */
+  private def throughS7(every: Int = 7): String = {
     val R = Pipeline.Remark
     val rxVals = KnowledgeBase.sampleRegexKbRows.map { case (b, pat, capreg, cat, sp) =>
       s"('$b', '$pat', '$capreg', '$cat', $sp, ${pat.length})"
     }.mkString(",\n      ")
-    val remarkCase =
-      if (uniqueRemarks)
-        s"""CASE WHEN m IS NULL THEN remark
-           |              WHEN brand = 'UNKNOWN' AND nm = 1 THEN '${R.noBrandUniqueRegex}'
-           |              WHEN brand = 'UNKNOWN' THEN '${R.noBrandLongestRegex}'
-           |              WHEN nm = 1 THEN '${R.uniqueRegex}'
-           |              ELSE '${R.longestRegex}' END""".stripMargin
-      else
-        s"""CASE WHEN m IS NULL THEN remark
-           |              WHEN brand = 'UNKNOWN' THEN '${R.noBrandLongestRegex}'
-           |              ELSE '${R.longestRegex}' END""".stripMargin
     matchPrefix(every) + s""",
        |s6 AS (
        |  SELECT rid, price, unit_wt, d2, brand, model, capacity,
@@ -212,7 +199,11 @@ object Q40Oracle {
        |     ORDER BY length(m) DESC NULLS LAST, rx.patlen DESC NULLS LAST, rx.pat ASC NULLS LAST) = 1),
        |s7 AS (
        |  SELECT rid, price, unit_wt, d2, newused,
-       |         $remarkCase AS remark,
+       |         CASE WHEN m IS NULL THEN remark
+       |              WHEN brand = 'UNKNOWN' AND nm = 1 THEN '${R.noBrandUniqueRegex}'
+       |              WHEN brand = 'UNKNOWN' THEN '${R.noBrandLongestRegex}'
+       |              WHEN nm = 1 THEN '${R.uniqueRegex}'
+       |              ELSE '${R.longestRegex}' END AS remark,
        |         CASE WHEN m IS NOT NULL THEN replace(m, ' ', '') ELSE model END AS model,
        |         CASE WHEN m IS NOT NULL AND capacity IS NULL THEN
        |              CASE WHEN sp = 0 THEN try_cast(capnum AS DOUBLE) / 10
@@ -227,10 +218,10 @@ object Q40Oracle {
        |  FROM (SELECT s7j.*, nullif(regexp_extract(d2, capreg, 1), '') AS capnum FROM s7j))""".stripMargin
   }
 
-  /** Oracle for q56: the regex pass via the RELATIONAL fallback's remark
-    * vocabulary, as a row-identity-free distribution. */
+  /** Oracle for q56: stages 2-7 through the regex pass, as a
+    * (brand, model, remark) distribution. */
   def regexOnlySql(every: Int): String =
-    throughS7(uniqueRemarks = false, every) + """
+    throughS7(every) + """
       |SELECT brand, model, remark, count(*) AS n
       |FROM s7 GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
 
@@ -239,7 +230,7 @@ object Q40Oracle {
     * tail differs between the two entry points. */
   private def throughS10(every: Int = 7): String = {
     val R = Pipeline.Remark
-    throughS7(uniqueRemarks = true, every) + s""",
+    throughS7(every) + s""",
        |s8 AS (
        |  SELECT rid, price, unit_wt, brand, model, newused,
        |         CASE WHEN capacity IS NULL AND cap8 IS NOT NULL THEN '${R.capacityInDesc}'

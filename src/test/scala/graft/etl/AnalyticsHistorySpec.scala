@@ -51,7 +51,6 @@ class AnalyticsHistorySpec extends SparkSpec {
 
 class KnowledgeBaseOutliersSpec extends graft.SparkSpec {
   import spark.implicits._
-  import org.apache.spark.sql.functions._
 
   test("K1 updateRegexKb: union, dedup on (brand, pattern), longest-first priority") {
     val kb = Seq(("A", "a\\d+", "x", "T", 0)).toDF("brand", "model_regex", "capacity_regex", "category", "starting_point")
@@ -62,16 +61,5 @@ class KnowledgeBaseOutliersSpec extends graft.SparkSpec {
     val pri = got.orderBy("priority").select("brand").as[String].collect()
     assert(pri.head == "B") // longer pattern → more negative priority → first
     assert(got.filter($"brand" === "A").select("capacity_regex").as[String].head() == "x")
-  }
-
-  test("approx outlier marking agrees with exact on well-separated data") {
-    val df = (1 to 200).map(i => ("g", 100.0 + (i % 5))).toDF("k", "v")
-      .union(Seq(("g", 200.0), ("g", 10.0)).toDF("k", "v"))
-    val exact = Outliers.markOutliers(df, "v", Seq("k"), lit(false))
-      .groupBy("outliers").count().as[(String, Long)].collect().toMap
-    val approx = Outliers.markOutliersApprox(df, "v", Seq("k"), lit(false))
-      .groupBy("outliers").count().as[(String, Long)].collect().toMap
-    assert(exact == approx)
-    assert(exact("yes") == 2)
   }
 }

@@ -10,25 +10,30 @@ class MatchingSpec extends SparkSpec {
     (3L, "SANY AND KOMATSU BOTH")).toDF("id", "text")
   val dim = Seq(("KOMATSU", 1), ("SANY", 2)).toDF("brand", "ref_order")
 
-  test("firstMatchJoin keeps first brand in reference order") {
-    val got = Matching.firstMatchJoin(fact, Seq("id"), dim,
-      $"text".contains($"brand"), "ref_order", Map("brand" -> "matched"))
-      .orderBy("id").select("matched").as[Option[String]].collect()
-    assert(got.toSeq == Seq(Some("KOMATSU"), None, Some("KOMATSU")))
+  test("literalFirstMatch keeps first brand in reference order") {
+    val brands = Seq("KOMATSU", "SANY")
+    for (m <- Seq(Matching.literalFirstMatch(Seq($"text"), brands),
+        Matching.firstMatchAuto(Seq($"text"), brands, automatonThreshold = 1))) {
+      val got = fact.orderBy("id").select(m).as[Option[String]].collect()
+      assert(got.toSeq == Seq(Some("KOMATSU"), None, Some("KOMATSU")))
+    }
   }
 
-  test("longestMatchJoin keeps longest match, deterministic on ties") {
-    val models = Seq(("PC200", 1), ("PC200-8", 2), ("PC2", 3)).toDF("m", "o")
-    val f = Seq((1L, "KOMATSU PC200-8 MODEL")).toDF("id", "text")
-    val got = Matching.longestMatchJoin(f, Seq("id"), models,
-      $"text".contains($"m"), "m", Map("m" -> "matched"))
-      .select("matched").as[String].head()
-    assert(got == "PC200-8")
+  test("literalLongestMatch keeps longest match, deterministic on ties") {
+    val models = Seq("PC200", "PC200-9", "PC200-8", "PC2")
+    val f = Seq("KOMATSU PC200-8 MODEL", "PC200-9 OR PC200-8", "PC2").toDF("text")
+    val want = Seq(Some("PC200-8"), Some("PC200-8"), Some("PC2"))
+    val flat = f.select(Matching.literalLongestMatch($"text", models)).as[Option[String]]
+    assert(flat.collect().toSeq == want)
+    val keyed = f.select(Matching.literalKeyedLongestMatch(lit("KOMATSU"), $"text",
+      Map("KOMATSU" -> models, "SANY" -> Seq("PC"))))
+    assert(keyed.as[Option[String]].collect().toSeq == want)
   }
 
   test("unmatched fact rows survive with nulls (left semantics)") {
-    val got = Matching.firstMatchJoin(fact, Seq("id"), dim,
-      $"text".contains($"brand"), "ref_order", Map("brand" -> "matched"))
-    assert(got.count() == 3)
+    val got = Matching.bestMatchJoin(fact, Seq("id"), dim,
+      $"text".contains($"brand"), Seq($"ref_order".asc_nulls_last), Map("brand" -> "matched"))
+      .orderBy("id").select("matched").as[Option[String]].collect()
+    assert(got.toSeq == Seq(Some("KOMATSU"), None, Some("KOMATSU")))
   }
 }

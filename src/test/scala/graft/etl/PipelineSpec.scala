@@ -80,6 +80,45 @@ class PipelineSpec extends SparkSpec {
     assert(r("remark") == Pipeline.Remark.noBrandUniqueRegex)
   }
 
+  test("regex pass: same rows at any KB size (padded to 65 and 1,000 patterns)") {
+    val extra = Seq(
+      // no brand; two patterns match → longest of several
+      factRow("x1", "EXCAVATOR PC200 AND PC300-7 LOT", "NOBRAND LTD", 150000, 1, 30000,
+        "2024/05/12"),
+      // brand known, two findall hits of one pattern → unique match, longest hit
+      factRow("x2", "SANY UNIT SY75 AND SY135C", "SOMECO", 140000, 1, 13500, "2024/05/13"),
+      // starting_point 3 decode
+      factRow("x3", "HITACHI ZX 210 EXCAVATOR", "SOMECO", 125000, 1, 21000, "2024/05/14"))
+      .toDF(fact.columns: _*)
+    val beforeRegex = fact.union(extra)
+      .transform(Pipeline.prepare)
+      .transform(Pipeline.matchKnowledgeBase(_, KnowledgeBase.sampleModelKb(spark)))
+      .transform(Pipeline.dropIrrelevant)
+      .transform(Pipeline.applyTypeRules)
+      .transform(Pipeline.markUsedNew)
+      .transform(Pipeline.markParts)
+    def regexRows(kb: Seq[(String, String, String, String, Int)]) =
+      Pipeline.regexPass(beforeRegex,
+          kb.toDF("brand", "model_regex", "capacity_regex", "category", "starting_point"))
+        .select($"`declaration number`", $"remark", $"brand", $"model", $"type", $"capacity")
+        .orderBy($"`declaration number`").collect().toSeq
+    val base = regexRows(KnowledgeBase.sampleRegexKbRows)
+    val R = Pipeline.Remark
+    assert(Set(R.uniqueRegex, R.noBrandUniqueRegex, R.noBrandLongestRegex)
+      .subsetOf(base.map(_.getString(1)).toSet))
+    // lower-case patterns never match the upper-cased description; their
+    // lengths (6 to 31) interleave with the real patterns' (11 to 19), so the
+    // real patterns' ordinals shift, and a wrong lookup would read the
+    // padding's brand, category or capacity regex
+    val brands = Seq("KOMATSU", "SANY", "HITACHI", "XCMG", "CATERPILLAR", "PADCO")
+    for (n <- Seq(65, 1000)) {
+      val pad = (0 until n - KnowledgeBase.sampleRegexKbRows.size).map { i =>
+        (brands(i % brands.size), s"never${"q" * (i % 23)}$i", "(\\d)", "PADCAT", 3)
+      }
+      assert(regexRows(KnowledgeBase.sampleRegexKbRows ++ pad) == base, s"at $n patterns")
+    }
+  }
+
   test("no-match rows keep UNKNOWNs") {
     val r = row("r5").get
     assert(r("brand") == "UNKNOWN" && r("model") == "UNKNOWN")

@@ -34,12 +34,6 @@ object KnowledgeBase {
   /** Letter↔digit boundary regex ("330GC" → boundary between 0 and G). */
   private val letterDigitBoundary = "(?<=[A-Za-z])(?=\\d)|(?<=\\d)(?=[A-Za-z])"
 
-  /** Insert a space at every letter↔digit boundary ("330GC" → "330 GC",
-    * "TE20HD" → "TE 20 HD") — the description-side form the reference's
-    * hand-maintained model_ref column encodes. */
-  def spacedVariant(model: String): String =
-    model.replaceAll(letterDigitBoundary, " ")
-
   /** KB-maintenance op: expand each model row with its spaced model_ref
     * variant, so containment matching also catches "MODEL 330 GC" style
     * descriptions. Original rows keep their (possibly explicit) refs. */
@@ -47,8 +41,9 @@ object KnowledgeBase {
     val base =
       if (kb.columns.contains("model_ref")) kb
       else kb.withColumn("model_ref", col("model"))
-    // codegen'd regexp_replace, not a UDF — same java.util.regex semantics
-    // as spacedVariant (the scalar twin used by driver-side callers)
+    // codegen'd regexp_replace, not a UDF: a space at every letter↔digit
+    // boundary ("330GC" → "330 GC", "TE20HD" → "TE 20 HD"), the
+    // description-side form the reference's hand-maintained model_ref encodes
     val variants = base
       .withColumn("model_ref", regexp_replace(col("model"), letterDigitBoundary, " "))
       .filter(col("model_ref") =!= col("model"))

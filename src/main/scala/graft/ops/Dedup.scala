@@ -907,11 +907,9 @@ object Dedup {
       segTokens: Int = 8, maxOccurrences: Long = 1L): DataFrame = {
     require(maxOccurrences >= 1, s"maxOccurrences must be >= 1, got $maxOccurrences")
     // segs feeds the counts agg AND the keep-join, so the explode runs
-    // twice — DELIBERATE for the batch path: at corpus scale a second
-    // map pass over compressed parquet beats materializing the exploded
-    // corpus (segments ≈ corpus-sized). The streaming twin makes the
-    // opposite call (localCheckpoint) because a micro-batch is small and
-    // recompute there re-reads the incoming files mid-commit.
+    // twice — DELIBERATE: at corpus scale a second map pass over
+    // compressed parquet beats materializing the exploded corpus
+    // (segments ≈ corpus-sized).
     val segs = segmentRows(df, idCol, textCol, segTokens)
     val counts = segs.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
     reassembleSegments(
@@ -920,10 +918,8 @@ object Dedup {
   }
 
   /** The map-only half of segment dedup: one (id, n_segs, seg_idx, seg,
-    * __h=md5(seg)) row per `segTokens`-token window. Shared by the batch
-    * operator and `Streams.segmentDedupStream` so the two can't disagree
-    * on segmentation. */
-  private[graft] def segmentRows(df: DataFrame, idCol: String, textCol: String,
+    * __h=md5(seg)) row per `segTokens`-token window. */
+  private def segmentRows(df: DataFrame, idCol: String, textCol: String,
       segTokens: Int): DataFrame = {
     require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
     // Let-bound: `slice(toks, …)` in the per-segment lambda would
@@ -944,7 +940,7 @@ object Dedup {
   /** The reassembly half: surviving segment rows → one row per doc with
     * the segments re-joined in original order (deterministic regardless
     * of arrival order). */
-  private[graft] def reassembleSegments(kept: DataFrame, idCol: String): DataFrame =
+  private def reassembleSegments(kept: DataFrame, idCol: String): DataFrame =
     kept.groupBy(col(idCol))
       .agg(first(col("n_segs")).as("n_segs"),
         count(lit(1)).as("n_kept"),

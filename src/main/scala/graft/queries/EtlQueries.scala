@@ -486,8 +486,8 @@ object EtlQueries {
              |    ORDER BY s_acctbal DESC, s_suppkey) AS INTEGER) AS rk FROM supplier)
              |WHERE rk <= 2 ORDER BY s_nationkey, rk""".stripMargin)),
 
-    // ─── event-time tumbling-window aggregate — the SAME transform the
-    //     streaming job runs (graft.streaming.Streams.windowedEventAgg) ──
+    // ─── event-time tumbling-window aggregate — the SAME transform runs
+    //     unchanged on a stream (graft.streaming.Streams.windowedEventAgg) ──
     "q23_window_agg" -> Q(
       (s, dir) => {
         import s.implicits._

@@ -2190,8 +2190,8 @@ object OpsQueries {
              |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // ─── typed Dataset path: per-user session summary via a typed
-    //     Aggregator (the batch twin of streaming.Streams.sessionize —
-    //     keeps the KeyValueGroupedDataset API but compiles to a real
+    //     Aggregator (ops.SessionSummaryAgg — keeps the
+    //     KeyValueGroupedDataset API but compiles to a real
     //     aggregate WITH partial aggregation; a mapGroups formulation
     //     would shuffle every raw event row to its group owner) ──────────
     "q43_user_sessions" -> Q(

@@ -36,11 +36,6 @@ object CustomsSource {
       .schema(inputSchema)
       .csv(path)
 
-  /** S1: any dimension table (model KB / regex KB / rates) from CSV with
-    * inferred-but-pinned schema supplied by the caller. */
-  def readDimCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
   /** S2/S3: history sink — append-mode Parquet partitioned by month of
     * `date`, so each monthly batch lands in its own partition and readers
     * prune by month. This is the 100TB shape of the reference's

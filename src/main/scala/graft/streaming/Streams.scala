@@ -1,59 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface.
+/** Structured Streaming surface: the customs path only.
   *
   * The reference is batch-only; its closest streaming analogue is the
-  * monthly history append (SURVEY.md §2.11). Here the same transforms run
-  * in both modes: each op is a `DataFrame => DataFrame` applied to a batch
-  * read OR a `readStream`, which is exactly how a 100TB pipeline promotes
-  * a batch job to incremental without rewriting logic.
+  * monthly history append (SURVEY.md §2.11). That append runs here as
+  * `pipelineStream`, the whole customs pipeline per micro-batch. The
+  * other entry point is `windowedEventAgg`, q23's transform, which also
+  * runs unchanged on a stream. Every other operator in the repo is
+  * batch-only.
   */
 object Streams {
 
-  /** Tumbling event-time window aggregate (shared by q23_window_agg and
-    * the streaming twin): count + exact decimal sum(value) per (1h window,
-    * event_type). With `withWatermark` upstream this runs incrementally in
-    * append mode. */
+  /** Tumbling event-time window aggregate (q23_window_agg): count + exact
+    * decimal sum(value) per (1h window, event_type). With `withWatermark`
+    * upstream this runs incrementally in append mode. */
   def windowedEventAgg(events: DataFrame, window_ : String = "1 hour"): DataFrame =
     events
       .groupBy(window(col("ts"), window_).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
       .select(col("w.start").as("ts_hour"), col("event_type"), col("n"), col("total_value"))
-
-  /** Same aggregate prepared for an actual stream: watermarked so state is
-    * bounded (late events beyond 2h dropped, window state evicted). */
-  def windowedEventAggStream(events: DataFrame): DataFrame =
-    windowedEventAgg(events.withWatermark("ts", "2 hours"))
-
-  /** The incremental history append (reference cell 81) as a streaming
-    * job: new files appearing under `incomingDir` are appended to the
-    * history table — at scale, a file-source → partitioned-sink job. */
-  def historyAppendStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, sinkDir: String, checkpointDir: String) =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet").option("path", sinkDir)
-
-  /** Streaming exact dedup: normalized-content-hash
-    * `dropDuplicatesWithinWatermark` — the streaming twin of
-    * `ops.Dedup.exactDupGroups` (first occurrence wins; state for a hash
-    * is evicted once the watermark passes `delay`, so state stays bounded
-    * on an unbounded corpus — the property that makes this the 100TB-
-    * ingest shape). `textCol` is hashed exactly like the batch op. */
-  def dedupeStream(docs: DataFrame, tsCol: String, textCol: String,
-      delay: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("content_hash",
-        md5(regexp_replace(trim(lower(col(textCol))), "\\s+", " ")))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** The WHOLE customs pipeline as an incremental streaming job: monthly
     * batch files appearing under `incomingDir` run through
@@ -72,9 +41,9 @@ object Streams {
     * after a partial write is replayed), so the write is made IDEMPOTENT:
     * the sink is partitioned by batch id and each batch dynamically
     * overwrites exactly its own partition — a replay rewrites the same
-    * partition instead of appending duplicates, giving effectively-once
-    * sink contents. (The built-in file sink, historyAppendStream, is
-    * exactly-once by manifest instead.) */
+    * `__batch_id=` partition instead of appending duplicates, so the sink
+    * holds each batch's rows once (StreamsSpec replays a batch to pin
+    * this). */
   def pipelineStream(spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       incomingDir: String, sinkDir: String, checkpointDir: String,
@@ -90,631 +59,4 @@ object Streams {
           .partitionBy("__batch_id")
           .parquet(sinkDir)
       }
-
-  /** Latest materialized snapshot version STRICTLY BELOW `beforeBatch`
-    * under `snapshotDir` (version dirs `__v=N`), or None before the
-    * first batch. Strictly below matters for replay correctness: a
-    * replayed micro-batch must read the version PRECEDING it, never its
-    * own (possibly partial) previous output. */
-  private def latestSnapshotVersion(spark: org.apache.spark.sql.SparkSession,
-      snapshotDir: String, beforeBatch: Long): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(snapshotDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .flatMap { n =>
-        if (n.startsWith("__v=")) scala.util.Try(n.stripPrefix("__v=").toLong).toOption
-        else None
-      }
-      .filter(_ < beforeBatch)
-      .sorted.lastOption
-  }
-
-  /** Streaming twin of `ops.Cdc.applyChanges`: a CDC change feed arriving
-    * under `changesDir` continuously materializes a keyed snapshot. Each
-    * micro-batch merges its changes onto the previous snapshot VERSION and
-    * writes the result as a new version directory (`__v=<batchId>`);
-    * readers take the highest version.
-    *
-    * Idempotent replay: a re-run micro-batch reads the version strictly
-    * before its own id and overwrites exactly its own directory, so a
-    * failure-replay converges to the same bytes instead of double-applying
-    * changes. Old versions are retained for readers / time travel; pruning
-    * them is a janitor concern, not the stream's.
-    *
-    * Each version is a CONCRETE directory written with plain overwrite —
-    * NOT a `partitionBy` partition: dynamic partition overwrite of an
-    * EMPTY result materializes nothing, so a batch that deletes every key
-    * would leave no version and the next batch would merge against the
-    * pre-deletion state, silently resurrecting deleted keys. A plain
-    * directory write always exists (possibly with zero part files), and
-    * the read side passes the snapshot schema explicitly so an empty
-    * version round-trips as an empty DataFrame instead of failing schema
-    * inference.
-    *
-    * Scale: each merge shuffles snapshot ∪ batch once on the key (the
-    * `applyChanges` shape); nothing here is per-row driver state. */
-  def cdcStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      changesDir: String, snapshotDir: String, checkpointDir: String,
-      init: DataFrame, keyCol: String) = {
-    val snapshotSchema = init.schema
-    spark.readStream.schema(schema).parquet(changesDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cur = latestSnapshotVersion(spark, snapshotDir, batchId) match {
-          case Some(v) =>
-            spark.read.schema(snapshotSchema).parquet(s"$snapshotDir/__v=$v")
-          case None => init
-        }
-        graft.ops.Cdc.applyChanges(cur, batch, keyCol)
-          .write.mode("overwrite")
-          .parquet(s"$snapshotDir/__v=$batchId")
-      }
-  }
-
-  /** Continuous corpus ingest: document files arriving under
-    * `incomingDir` pass the quality gate, dedupe against THEMSELVES
-    * (exact, min-id canonical) and then against everything already in the
-    * corpus (`ops.Dedup.newAgainstCorpus`: exact + verified near-dup),
-    * and the genuinely novel survivors append as a new
-    * `__batch_id=<batchId>` partition — the round-4 corpus operators
-    * composed into the actual "keep the training corpus growing without
-    * rot" job.
-    *
-    * Idempotent replay: the against-corpus check reads only partitions
-    * with `__batch_id < batchId`, so a replayed batch never sees its own
-    * (possibly partial) previous output — it would otherwise flag its own
-    * docs as dups and drop them; the write then dynamically overwrites
-    * exactly its own partition. */
-  def corpusIngestStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, corpusDir: String, checkpointDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      stopwords: Seq[String] = Seq("the", "a")) =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val quality = batch.filter(graft.ops.TextStats.qualityKeep(col(textCol), stopwords))
-        val selfDeduped = quality
-          .withColumn("__h", md5(regexp_replace(trim(lower(col(textCol))), "\\s+", " ")))
-          .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("__h")).orderBy(col(idCol).asc)))
-          .filter(col("__rn") === 1).drop("__h", "__rn")
-        val hasPrior = {
-          val p = new org.apache.hadoop.fs.Path(corpusDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.exists(p) && fs.listStatus(p).exists { st =>
-            st.isDirectory && {
-              val n = st.getPath.getName
-              n.startsWith("__batch_id=") &&
-                scala.util.Try(n.stripPrefix("__batch_id=").toLong).toOption
-                  .exists(_ < batchId)
-            }
-          }
-        }
-        val novel =
-          if (hasPrior)
-            graft.ops.Dedup.newAgainstCorpus(
-              spark.read.parquet(corpusDir)
-                .filter(col("__batch_id") < batchId).drop("__batch_id"),
-              selfDeduped, idCol, textCol)
-          else selfDeduped
-        novel.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(corpusDir)
-      }
-
-  /** Streaming sub-document boilerplate scrub — the incremental twin of
-    * `Dedup.dedupSegments` (q92), same pattern as `corpusIngestStream`:
-    * per micro-batch, the batch's segments are counted, combined with the
-    * ACCUMULATED per-segment counts of all prior batches (the index), the
-    * batch's docs are reassembled from segments whose corpus-so-far total
-    * stays ≤ `maxOccurrences`, and the batch's own counts append to the
-    * index as a new version. Replay-idempotent: a replayed batch reads
-    * only index versions STRICTLY below its id and overwrites its own
-    * clean/index partitions. Streaming semantics, documented: each batch
-    * is judged against the corpus SO FAR — when a later batch pushes a
-    * segment over the threshold, earlier already-emitted docs are not
-    * retro-scrubbed (re-run the batch operator over the full corpus for
-    * a retroactive pass). Segmentation/reassembly are the literal shared
-    * helpers (`Dedup.segmentRows`/`reassembleSegments`), so the stream
-    * and the batch op cannot drift. */
-  def segmentDedupStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, cleanDir: String, indexDir: String,
-      checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text", segTokens: Int = 8,
-      maxOccurrences: Long = 1L) =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val segs = graft.ops.Dedup.segmentRows(batch, idCol, textCol, segTokens)
-          .localCheckpoint(eager = false) // segs feeds counts AND the keep-join
-        val batchCounts = segs.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
-        val hasPrior = {
-          val p = new org.apache.hadoop.fs.Path(indexDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.exists(p) && fs.listStatus(p).exists { st =>
-            st.isDirectory && {
-              val n = st.getPath.getName
-              n.startsWith("__batch_id=") &&
-                scala.util.Try(n.stripPrefix("__batch_id=").toLong).toOption
-                  .exists(_ < batchId)
-            }
-          }
-        }
-        val total =
-          if (hasPrior)
-            batchCounts.unionByName(
-                spark.read.parquet(indexDir)
-                  .filter(col("__batch_id") < batchId)
-                  .select(col("__h"), col("__n")))
-              .groupBy(col("__h")).agg(sum(col("__n")).as("__n"))
-          else batchCounts
-        val cleaned = graft.ops.Dedup.reassembleSegments(
-          segs.join(total.filter(col("__n") <= maxOccurrences).select(col("__h")), "__h"),
-          idCol)
-        cleaned.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(cleanDir)
-        batchCounts.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(indexDir)
-      }
-
-  final case class RateState(recent: List[Long])
-
-  /** Sliding-window RATE LIMITER: for each event, is it the (maxEvents+1)-th
-    * same-key event inside the trailing `windowMicros`? Emits
-    * (key, tsMicros, allowed) per event — the abuse/quota gate that runs
-    * BESIDE a 100 TB ingest stream.
-    *
-    * Bounded state by construction: the per-key state is the most recent
-    * ≤ maxEvents event times still inside the window — older timestamps
-    * can never flip a future decision (the decision only needs "are there
-    * ≥ maxEvents retained events in-window"), so a flooding key holds
-    * maxEvents longs, not its flood. Within a micro-batch events process
-    * in event-time order, making the decision deterministic and — on
-    * in-order delivery — EQUAL to the batch `TimeSeries.trailing`
-    * n_win > maxEvents flag (the spec cross-check). */
-  def rateLimitStream(events: Dataset[(Long, Long)], windowMicros: Long,
-      maxEvents: Int): Dataset[(Long, Long, Boolean)] = {
-    import events.sparkSession.implicits._
-    require(windowMicros > 0 && maxEvents > 0, "window and max must be positive")
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[RateState, (Long, Long, Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[(Long, Long)], state: GroupState[RateState]) =>
-          var recent = state.getOption.map(_.recent).getOrElse(Nil)
-          val out = evs.map(_._2).toSeq.sorted.map { ts =>
-            recent = recent.filter(_ >= ts - windowMicros)
-            val allowed = recent.size < maxEvents
-            recent = (ts :: recent).sorted(Ordering[Long].reverse)
-              .take(maxEvents)
-            (key, ts, allowed)
-          }
-          state.update(RateState(recent))
-          out.iterator
-      }
-  }
-
-  /** Streaming drift monitor: per micro-batch, `ops.Drift.chiSquareDrift`
-    * of the batch's category distribution against a STATIC reference
-    * profile, appended as one versioned row-set per batch
-    * (`__batch_id=N`) — the alerting feed a 100 TB ingest runs beside the
-    * corpus stream ("today's crawl shifted; chi2 jumped"). Uses the
-    * literal batch operator, so stream and batch cannot drift
-    * (the StreamsSpec cross-check); partition-overwrite per batch id
-    * makes replays idempotent (the cdcStream discipline). The reference
-    * profile is an O(#categories) aggregate, computed once outside. */
-  def driftMonitorStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, alertsDir: String, checkpointDir: String,
-      reference: DataFrame, catCol: String) =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Drift.chiSquareDrift(reference, batch, catCol)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(alertsDir)
-      }
-
-  /** Streaming quality-classifier scoring: apply a FIXED fitted weight
-    * vector (`ops.Classifier.logregFit`, trained offline on the corpus —
-    * the CCNet deployment shape: train once, filter the crawl online) to
-    * every incoming micro-batch via the literal batch scorer, so stream
-    * and batch scores cannot drift (the driftMonitorStream discipline).
-    * Map-only per batch — the weights are 65 doubles baked into the
-    * expression, no state, no joins; partition-overwrite per batch id
-    * makes replays idempotent. */
-  def scoreStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, scoredDir: String, checkpointDir: String,
-      weights: Seq[(Int, Double)], labelPred: org.apache.spark.sql.Column,
-      idCol: String = "doc_id", textCol: String = "text") =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.Classifier.logregScore(batch, idCol, textCol, labelPred, weights)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(scoredDir)
-      }
-
-  /** The crawl-INGEST scrub stage as ONE batch-or-stream transform:
-    * blocklist screen (Aho-Corasick, q162) + quality rules with the
-    * per-doc drop REASON (q170's first-fail + bitmask — an ingest
-    * stage that cannot say why it dropped a doc is undebuggable at
-    * crawl scale) + typed PII redaction (q171). Emits EVERY doc with
-    * (keep, reason, fail_mask, clean_text) — routing, not deletion, so
-    * the reject stream stays auditable. Stateless map-only. */
-  def ingestScrub(docs: DataFrame, blocklist: Seq[String],
-      stopwords: Seq[String] = Seq("the", "a"),
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("__hit", graft.ops.TextStats.blocklistHit(col(textCol), blocklist))
-      .withColumn("__fr", graft.ops.TextStats.filterReasons(col(textCol), stopwords))
-      .withColumn("reason",
-        when(col("__hit").isNotNull, concat(lit("blocklist:"), col("__hit")))
-          .otherwise(col("__fr.reason")))
-      .withColumn("keep", col("reason") === "pass")
-      .withColumn("fail_mask", col("__fr.fail_mask"))
-      .withColumn("clean_text", graft.ops.TextStats.redactPiiTyped(col(textCol)))
-      .select(col(idCol), col("keep"), col("reason"), col("fail_mask"),
-        col("clean_text"))
-
-  /** `ingestScrub` as the incremental crawl-ingest job: new files under
-    * `incomingDir` scrub per micro-batch through the LITERAL batch
-    * transform (stream and batch cannot drift); partition-overwrite per
-    * batch id makes replays idempotent. No state, no joins — the 100 TB
-    * ingest front door is embarrassingly parallel by construction. */
-  def ingestScrubStream(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      incomingDir: String, outDir: String, checkpointDir: String,
-      blocklist: Seq[String], stopwords: Seq[String] = Seq("the", "a"),
-      idCol: String = "doc_id", textCol: String = "text") =
-    spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        ingestScrub(batch, blocklist, stopwords, idCol, textCol)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(outDir)
-      }
-
-  /** Watermarked stream-stream inner join: each purchase pairs with the
-    * same user's clicks from the preceding `lookback`. Both sides carry
-    * watermarks and the join condition bounds event time on BOTH ends, so
-    * Spark can evict join state — the requirement for an unbounded
-    * stream-stream join to run with bounded memory. Works identically on
-    * batch DataFrames (the batch twin the spec cross-checks). */
-  def purchaseClickJoin(clicks: DataFrame, purchases: DataFrame,
-      lookback: String = "1 hour", delay: String = "2 hours"): DataFrame = {
-    val c = clicks.select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-      col("event_id").as("click_id"))
-    val p = purchases.select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-      col("event_id").as("purchase_id"), col("value"))
-    val cw = if (c.isStreaming) c.withWatermark("click_ts", delay) else c
-    val pw = if (p.isStreaming) p.withWatermark("purchase_ts", delay) else p
-    pw.join(cw,
-      col("p_user") === col("c_user") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $lookback") &&
-        col("click_ts") <= col("purchase_ts"))
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("purchase_ts"),
-        col("click_id"), col("click_ts"), col("value"))
-  }
-
-  /** Streaming twin of q43: the SAME mergeable typed Aggregator
-    * (ops.SessionSummaryAgg) applied incrementally — partial aggregation
-    * per micro-batch, one state buffer per user (bounded by user count,
-    * not event count). Works identically on a batch Dataset, which is how
-    * the spec cross-checks it. */
-  def sessionSummaryStream(events: Dataset[(Long, String, Double)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .agg(graft.ops.SessionSummaryAgg.toColumn.name("s"))
-      .toDF("user_id", "s")
-      .selectExpr("user_id", "s._1 AS n_events", "s._2 AS n_purchases",
-        "s._3 AS total_value")
-  }
-
-  /** Streaming twin of q104: the SAME mergeable `CmsAgg` applied
-    * incrementally per group — one O(d·w) counter buffer per key in the
-    * state store regardless of stream length (the property that makes a
-    * sketch the right answer on an unbounded term stream, where the exact
-    * per-term counts of q76 would grow without bound). Because CMS
-    * contents are a pure function of the input multiset (fold-order
-    * free), the streamed sketch is BIT-IDENTICAL to the batch sketch over
-    * the same data — which is how the spec gates it. Input: (group,
-    * 60-bit item hash) pairs. */
-  def cmsStream(terms: Dataset[(String, Long)], d: Int = 4,
-      w: Int = 64): DataFrame = {
-    import terms.sparkSession.implicits._
-    terms.groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.ops.Sketches.CmsAgg(d, w).toColumn.name("cms"))
-      .toDF("grp", "cms")
-  }
-
-  final case class FunnelState(stage: Int, ts: Long)
-
-  /** Streaming twin of `ops.Funnel`: a per-user stage machine via
-    * `flatMapGroupsWithState` — state is ONE (stage, conversion-ts) pair
-    * per user, advanced by scanning each micro-batch's events in
-    * event-time order with the same strictly-after first-touch rule the
-    * batch operator uses (so on in-order batches the final stages equal
-    * the batch funnel exactly — the spec's cross-check). Emits
-    * (user_id, stage_idx) whenever a user advances; stage only ever
-    * increases, so downstream counts are max-per-user. Late events that
-    * arrive after a later stage already converted are ignored — the
-    * documented at-stream semantics (the batch op is the replayable
-    * source of truth). */
-  def funnelStream(events: Dataset[(Long, java.sql.Timestamp, String)],
-      stages: Seq[String]): Dataset[(Long, Int)] = {
-    import events.sparkSession.implicits._
-    require(stages.nonEmpty, "funnelStream needs at least one stage")
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelState, (Long, Int)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, evs: Iterator[(Long, java.sql.Timestamp, String)],
-            state: GroupState[FunnelState]) =>
-          val prev = state.getOption.getOrElse(FunnelState(-1, Long.MinValue))
-          var stage = prev.stage
-          var ts = prev.ts
-          evs.toSeq.filter(_._2 != null).sortBy(_._2.getTime).foreach {
-            case (_, t, typ) =>
-              if (stage + 1 < stages.length && typ == stages(stage + 1) &&
-                  t.getTime > ts) {
-                stage += 1; ts = t.getTime
-              }
-          }
-          if (stage != prev.stage) {
-            state.update(FunnelState(stage, ts))
-            Iterator((uid, stage))
-          } else Iterator.empty
-      }
-  }
-
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, event_type: String)
-  final case class SessionSummary(user_id: Long, n_events: Long, n_purchases: Long)
-
-  /** Custom stateful op: per-user running session summary via
-    * `flatMapGroupsWithState` (the KeyValueGroupedDataset path the
-    * reference has no analogue for — included for streaming completeness).
-    *
-    * State is BOUNDED on an unbounded stream: the source is watermarked
-    * (`delay`) and every update arms an event-time timeout `idleGap` past
-    * the user's latest event. When the watermark passes that point the
-    * user's summary is re-emitted once as a terminal record and the state
-    * is REMOVED — idle keys cannot accumulate forever. A user seen again
-    * after eviction starts a fresh summary (the gap defines the session).
-    * In batch mode timeouts don't exist; the same code runs with
-    * NoTimeout and a single pass per key. */
-  def sessionize(events: Dataset[SessionEvent], delay: String = "2 hours",
-      idleGap: String = "30 minutes"): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-    val src = if (streaming) events.withWatermark("ts", delay) else events
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionSummary, SessionSummary](
-        OutputMode.Append, timeout) {
-        (uid: Long, evs: Iterator[SessionEvent], state: GroupState[SessionSummary]) =>
-          if (state.hasTimedOut) {
-            val terminal = state.getOption.iterator
-            state.remove() // evict idle-key state; next sighting starts fresh
-            terminal
-          } else {
-            val prev = state.getOption.getOrElse(SessionSummary(uid, 0L, 0L))
-            var n = prev.n_events
-            var p = prev.n_purchases
-            var maxTs = Long.MinValue
-            evs.foreach { e =>
-              n += 1
-              if (e.event_type == "purchase") p += 1
-              // null-safe: batch inputs (or nullable parquet) may carry
-              // null ts rows that no late-event filter removed
-              if (e.ts != null && e.ts.getTime > maxTs) maxTs = e.ts.getTime
-            }
-            val next = SessionSummary(uid, n, p)
-            state.update(next)
-            if (streaming) {
-              // timeouts are NOT carried over between invocations for a
-              // key, so one must be armed on every call — a batch of only
-              // null-ts events falls back to the current watermark, else
-              // the key's state would never evict
-              if (maxTs != Long.MinValue) state.setTimeoutTimestamp(maxTs, idleGap)
-              else state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), 0L) + 1L, idleGap)
-            }
-            Iterator(next)
-          }
-      }
-  }
-
-  /** Per-key EWMA state: the last `taps` values, newest first — a FIXED
-    * `taps`-long ring regardless of how many events a key floods in. */
-  final case class EwmaState(recent: List[Double])
-
-  final case class Scd2State(last: String, version: Long)
-
-  final case class MgState(counters: Map[String, Long], processed: Long)
-
-  /** Streaming Misra–Gries heavy hitters: a GLOBAL k-bounded counter
-    * summary maintained in ONE state row (at most k counters + the
-    * processed count — never data-scaled), emitting the summary
-    * snapshot after each micro-batch. The textbook guarantee carries
-    * over: any term with true frequency > n/k survives, and every
-    * reported count is within n/k of exact — `StreamsSpec` pins BOTH
-    * against exact counts across a batch split, plus the 1-row state
-    * bound. Production shards by term hash and merges (MG summaries
-    * are mergeable — the batch `Sketches.misraGries` aggregator's
-    * merge); the single-key layout here keeps the audit honest.
-    * Input: (term, seq) — seq gives in-order delivery within a batch.
-    * Output: (term, count_lower_bound, n_processed) snapshot rows. */
-  def mgStream(terms: Dataset[(String, Long)], k: Int)
-      : Dataset[(String, Long, Long)] = {
-    import terms.sparkSession.implicits._
-    require(k >= 1, "k >= 1")
-    terms.groupByKey(_ => 0)
-      .flatMapGroupsWithState[MgState, (String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, evs: Iterator[(String, Long)], state: GroupState[MgState]) =>
-          var m = state.getOption.map(_.counters).getOrElse(Map.empty[String, Long])
-          var n = state.getOption.map(_.processed).getOrElse(0L)
-          evs.toSeq.sortBy(_._2).foreach { case (t, _) =>
-            n += 1
-            if (m.contains(t)) m += t -> (m(t) + 1)
-            else if (m.size < k) m += t -> 1L
-            else m = m.map { case (kk, v) => kk -> (v - 1) }.filter(_._2 > 0)
-          }
-          state.update(MgState(m, n))
-          m.toSeq.sortBy(x => (-x._2, x._1))
-            .map { case (t, c) => (t, c, n) }.iterator
-      }
-  }
-
-  /** Streaming twin of `Cdc.scd2Build`'s version-OPEN events: each
-    * incoming (key, usMicros, eventId, value) change emits a new
-    * version row (key, us, value, version) IFF the value differs from
-    * the key's current state (re-emits collapse, exactly as the batch
-    * op). The batch SCD2 table is this stream's output decorated with
-    * lead() closes — `StreamsSpec` pins row-for-row equality on the
-    * open halves across micro-batch boundaries.
-    *
-    * State bound: ONE row per key holding (last value, version counter)
-    * — a flooding key updates in place, never grows (spec-pinned via
-    * stateOperators metrics). */
-  def scd2CurrentStream(changes: Dataset[(Long, Long, Long, String)])
-      : Dataset[(Long, Long, String, Long)] = {
-    import changes.sparkSession.implicits._
-    changes.groupByKey(_._1)
-      .flatMapGroupsWithState[Scd2State, (Long, Long, String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[(Long, Long, Long, String)],
-            state: GroupState[Scd2State]) =>
-          var last = state.getOption.map(_.last).orNull
-          var ver = state.getOption.map(_.version).getOrElse(0L)
-          val out = evs.toSeq.sortBy(e => (e._2, e._3)).flatMap {
-            case (_, us, _, v) =>
-              if (last == null || last != v) {
-                ver += 1; last = v
-                Some((key, us, v, ver))
-              } else None
-          }
-          state.update(Scd2State(last, ver))
-          out.iterator
-      }
-  }
-
-  /** Streaming twin of `ops.TimeSeries.ewmaFir`: per-key FIR exponential
-    * smoothing with `taps` lag taps. State is the last `taps` values
-    * (bounded — a flooding key holds `taps` doubles, not its flood);
-    * events process in (ts, tiebreak) order within a micro-batch, and on
-    * in-order delivery the emitted series EQUALS the batch op row for
-    * row (the StreamsSpec cross-check). Input: (key, tsMicros, eventId,
-    * value); output: (key, eventId, ewma). */
-  def ewmaStream(events: Dataset[(Long, Long, Long, Double)], alpha: Double,
-      taps: Int): Dataset[(Long, Long, Double)] = {
-    import events.sparkSession.implicits._
-    require(alpha > 0 && alpha < 1 && taps >= 1, "alpha in (0,1), taps >= 1")
-    val coefs = (0 until taps).map(k => alpha * math.pow(1.0 - alpha, k))
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[(Long, Long, Long, Double)],
-            state: GroupState[EwmaState]) =>
-          var recent = state.getOption.map(_.recent).getOrElse(Nil)
-          val out = evs.toSeq.sortBy(e => (e._2, e._3)).map { case (_, _, eid, v) =>
-            recent = (v :: recent).take(taps)
-            // ascending-k fold over (current :: lags), matching ewmaFir
-            var num = 0.0; var den = 0.0
-            recent.zipWithIndex.foreach { case (x, k) =>
-              num += x * coefs(k); den += coefs(k)
-            }
-            val e = BigDecimal(num / den)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-            (key, eid, e)
-          }
-          state.update(EwmaState(recent))
-          out.iterator
-      }
-  }
-
-  final case class ZoneState(mn: Double, mx: Double, n: Long)
-
-  final case class DigestState(sumMod: Long, n: Long)
-
-  /** Streaming twin of `TextStats.datasetDigest`: the running release
-    * version id per group, updated as documents arrive. State is ONE
-    * (sum mod 2^60, count) row per group; the digest is a commutative
-    * modular sum, so arrival order and batch boundaries can't move it —
-    * at any prefix the emission equals the batch digest of the rows seen
-    * so far (StreamsSpec cross-checks the final one against the gated
-    * batch op). Input: (group, hash60) rows — hashes < 2^60, so the
-    * running sum never overflows a Long between mod steps. */
-  def digestStream(rows: Dataset[(String, Long)])
-      : Dataset[(String, Long, Long)] = {
-    import rows.sparkSession.implicits._
-    val m = 1L << 60
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState[DigestState, (String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (g: String, evs: Iterator[(String, Long)],
-            state: GroupState[DigestState]) =>
-          var s = state.getOption.map(_.sumMod).getOrElse(0L)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          evs.foreach { case (_, h) => s = (s + (h % m)) % m; n += 1 }
-          state.update(DigestState(s, n))
-          Iterator.single((g, n, s))
-      }
-  }
-
-  /** Streaming twin of the zone-map statistics `Profile.zonemapAudit`
-    * consumes: per storage-zone (min, max, count) envelopes maintained
-    * INCREMENTALLY on ingest — how file/row-group stats actually come
-    * to exist in a lakehouse (computed at write time, not by rescanning
-    * 100 TB). Emits the updated envelope for every zone touched by the
-    * micro-batch; the latest emission per zone equals the batch
-    * aggregate exactly (min/max/count are order-free), which
-    * `StreamsSpec` pins.
-    *
-    * State bound: ONE (double, double, long) triple per zone — a
-    * flooding zone updates in place, never grows. */
-  def zoneStatsStream(rows: Dataset[(Long, Double)])
-      : Dataset[(Long, Double, Double, Long)] = {
-    import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState[ZoneState, (Long, Double, Double, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (zone: Long, evs: Iterator[(Long, Double)],
-            state: GroupState[ZoneState]) =>
-          var mn = state.getOption.map(_.mn).getOrElse(Double.MaxValue)
-          var mx = state.getOption.map(_.mx).getOrElse(Double.MinValue)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          evs.foreach { case (_, v) =>
-            mn = math.min(mn, v); mx = math.max(mx, v); n += 1
-          }
-          state.update(ZoneState(mn, mx, n))
-          Iterator.single((zone, mn, mx, n))
-      }
-  }
 }

@@ -44,6 +44,21 @@ class CdcSpec extends SparkSpec {
     assert(got.toSeq == Seq((2L, "back", 21.0)))
   }
 
+  test("chained merges: deleting every key leaves an empty snapshot a later upsert builds on") {
+    def change(k: Long, status: String, price: Double, ts: Long, op: String) =
+      (k, status, price, ts, 1L, op)
+    def merge(cur: org.apache.spark.sql.DataFrame, rows: (Long, String, Double, Long, Long, String)*) =
+      Cdc.applyChanges(cur, rows.toDF("k", "status", "price", "ts", "seq", "op"), "k")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    val v1 = merge(snap, change(1, "x", 0.0, 1, "delete"), change(2, "x", 0.0, 1, "delete"),
+      change(3, "c2", 33.0, 1, "upsert"))
+    assert(rowsOf(v1) == Seq((3L, "c2", 33.0), (4L, "d", 40.0)))
+    val v2 = merge(v1, change(3, "x", 0.0, 2, "delete"), change(4, "x", 0.0, 2, "delete"))
+    assert(v2.isEmpty, "an all-deleted merge should yield an empty snapshot")
+    assert(rowsOf(merge(v2, change(9, "new", 99.0, 3, "upsert"))) == Seq((9L, "new", 99.0)))
+  }
+
   test("snapshotDiff classifies added/removed/changed/unchanged") {
     val oldV = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "text")
     val newV = Seq((1L, "a"), (2L, "B2"), (4L, "d")).toDF("id", "text")

@@ -45,6 +45,15 @@ class DriftSpec extends SparkSpec {
     assert(rows.map(_._3).distinct.size == 1, "total repeated on every row")
   }
 
+  test("chi-square drift: a bigger shift scores a bigger chi2") {
+    val ref = Seq("en", "en", "de", "fr").toDF("lang")
+    def chi2(cur: Seq[String]): Double =
+      Drift.chiSquareDrift(ref, cur.toDF("lang"), "lang").select($"chi2").as[Double].head()
+    val mild = chi2(Seq("en", "de"))
+    val big = chi2(Seq("de", "de", "de", "zz")) // zz is unseen: NULL contrib, not in chi2
+    assert(mild > 0.0 && big > mild, s"mild $mild, big $big")
+  }
+
   test("klDrift: identical distributions give kl = psi = 0") {
     val a = Seq("x", "x", "y").toDF("c")
     val out = Drift.klDrift(a, a, "c")

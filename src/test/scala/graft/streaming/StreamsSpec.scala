@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
+import graft.etl.KnowledgeBase
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -32,203 +32,31 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stateful sessionize accumulates per-user counts across batches") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Streams.SessionEvent]
-    val out = Streams.sessionize(stream.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("sess").start()
-    try {
-      val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      stream.addData(
-        Streams.SessionEvent(1, t, "view"), Streams.SessionEvent(1, t, "purchase"))
-      out.processAllAvailable()
-      stream.addData(Streams.SessionEvent(1, t, "purchase"))
-      out.processAllAvailable()
-      val last = spark.table("sess")
-        .as[Streams.SessionSummary].collect().maxBy(_.n_events)
-      assert(last == Streams.SessionSummary(1, 3, 2))
-    } finally out.stop()
-  }
+  // two monthly customs batches: s1/s2 (one KB hit, one miss), then s3
+  private def factRow(id: String, desc: String) =
+    (id, desc, "MOKAC CO", 120000.0, 1.0, 20000.0, "2024/05/01", "84295200", "202405")
+  private val factCols = Seq("declaration number", "product description", "supplier",
+    "amount in usd", "qty", "weight in kg", "date", "hs code", "month")
+  private def batch1 = Seq(factRow("s1", "KOMATSU PC200-8 EXCAVATOR"),
+    factRow("s2", "MYSTERY DEVICE")).toDF(factCols: _*)
+  private def batch2 = Seq(factRow("s3", "SANY EXCAVATOR SY365H GOOD")).toDF(factCols: _*)
 
-  test("typed session Aggregator runs incrementally and matches its batch twin") {
-    implicit val sq = spark.sqlContext
-    val batchEv = Tables.events(spark, sfTiny)
-      .select($"user_id", $"event_type", $"value").as[(Long, String, Double)]
-    val batch = Streams.sessionSummaryStream(batchEv)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(batch.nonEmpty)
-    val stream = MemoryStream[(Long, String, Double)]
-    val rows = batchEv.collect().toSeq
-    val (first, second) = rows.splitAt(rows.length / 2)
-    val q = Streams.sessionSummaryStream(stream.toDS())
-      .writeStream.outputMode("complete").format("memory").queryName("sess_agg").start()
-    try {
-      stream.addData(first)
-      q.processAllAvailable()
-      stream.addData(second) // second micro-batch merges into existing buffers
-      q.processAllAvailable()
-      val streamed = spark.table("sess_agg")
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming CMS sketch is bit-identical to the batch sketch") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.{explode, lower, split, col}
-    val terms = Tables.documents(spark, sfTiny)
-      .select(col("lang"), explode(split(lower(col("text")), " ")).as("term"))
-      .select(col("lang"), graft.ops.Dedup.baseHash(col("term")).as("h"))
-      .as[(String, Long)]
-    val batch = Streams.cmsStream(terms)
-      .as[(String, Seq[Long])].collect().toMap
-    assert(batch.nonEmpty && batch.values.exists(_.exists(_ > 0)))
-    val stream = MemoryStream[(String, Long)]
-    val rows = terms.collect().toSeq
-    val (first, second) = rows.splitAt(rows.length / 2)
-    val q = Streams.cmsStream(stream.toDS())
-      .writeStream.outputMode("complete").format("memory").queryName("cms_agg").start()
-    try {
-      stream.addData(first)
-      q.processAllAvailable()
-      stream.addData(second) // merges elementwise into the state buffers
-      q.processAllAvailable()
-      val streamed = spark.table("cms_agg").as[(String, Seq[Long])].collect().toMap
-      assert(streamed == batch) // fold-order freedom ⇒ exact equality
-    } finally q.stop()
-  }
-
-  test("streaming funnel stages match the batch funnel on in-order batches") {
-    implicit val sq = spark.sqlContext
-    val stages = Seq("view", "click", "purchase")
-    val ev = Tables.events(spark, sfTiny)
-      .select($"user_id", $"ts", $"event_type")
-      .as[(Long, java.sql.Timestamp, String)]
-    val batch = graft.ops.Funnel.funnel(
-        Tables.events(spark, sfTiny), "user_id", "ts", "event_type", stages)
-      .select($"stage_idx", $"n_users").as[(Int, Long)].collect().toMap
-    // split by TIME so each user's events arrive in order across batches
-    val rows = ev.collect().toSeq.sortBy(_._2.getTime)
-    val (first, second) = rows.splitAt(rows.length / 2)
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = Streams.funnelStream(stream.toDS(), stages)
-      .toDF("user_id", "stage_idx")
-      .writeStream.outputMode("update").format("memory").queryName("funnel_st").start()
-    try {
-      stream.addData(first)
-      q.processAllAvailable()
-      stream.addData(second) // users advance across the batch boundary
-      q.processAllAvailable()
-      val finalStage = spark.table("funnel_st")
-        .groupBy($"user_id").agg(org.apache.spark.sql.functions.max($"stage_idx").as("s"))
-        .as[(Long, Int)].collect()
-      val streamedCounts = stages.indices
-        .map(k => k -> finalStage.count(_._2 >= k).toLong).toMap
-      assert(streamedCounts == batch)
-      // dense tiny fixture: every viewing user may fully convert — require
-      // only a populated, monotone funnel
-      assert(batch(0) > 0 && batch(0) >= batch(1) && batch(1) >= batch(2))
-    } finally q.stop()
-  }
-
-  test("sessionize evicts idle-key state on event-time timeout") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Streams.SessionEvent]
-    val out = Streams.sessionize(stream.toDS(), delay = "2 hours", idleGap = "30 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("sess_evict").start()
-    try {
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      val t4h = java.sql.Timestamp.valueOf("2024-01-01 04:00:00")
-      stream.addData(
-        Streams.SessionEvent(1, t0, "view"), Streams.SessionEvent(1, t0, "purchase"))
-      out.processAllAvailable() // batch 1: user 1 → (1, 2, 1); timeout armed at t0+30m
-      stream.addData(Streams.SessionEvent(2, t4h, "view"))
-      out.processAllAvailable() // batch 2: watermark advances to t4h-2h > t0+30m
-      stream.addData(Streams.SessionEvent(2, t4h, "view"))
-      out.processAllAvailable() // batch 3: user 1's timeout FIRES → terminal re-emit + remove
-      val user1Rows = spark.table("sess_evict")
-        .as[Streams.SessionSummary].collect().filter(_.user_id == 1)
-      assert(user1Rows.count(_ == Streams.SessionSummary(1, 2, 1)) == 2,
-        s"expected the (1,2,1) summary twice (live + terminal), got ${user1Rows.toSeq}")
-      // state was removed: the user's next event starts a FRESH summary
-      stream.addData(Streams.SessionEvent(1, t4h, "view"))
-      out.processAllAvailable()
-      val fresh = spark.table("sess_evict")
-        .as[Streams.SessionSummary].collect().filter(_.user_id == 1)
-      assert(fresh.contains(Streams.SessionSummary(1, 1, 0)),
-        s"state not evicted — expected a fresh (1,1,0) summary, got ${fresh.toSeq}")
-    } finally out.stop()
-  }
-
-  test("streaming dedup keeps one row per normalized content hash") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = stream.toDF().toDF("ts", "doc_id", "text")
-    val q = Streams.dedupeStream(df, "ts", "text")
-      .writeStream.outputMode("append").format("memory").queryName("dedup").start()
-    try {
-      val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      stream.addData(Seq(
-        (t, 1L, "Hello  World"), (t, 2L, "hello world "), (t, 3L, "other")))
-      q.processAllAvailable()
-      // same batch: normalized dup of doc 1 dropped, first wins
-      val ids = spark.table("dedup").select($"doc_id").as[Long].collect().toSet
-      assert(ids.size == 2 && ids.contains(3L))
-      stream.addData(Seq((t, 4L, "HELLO WORLD"))) // dup arriving in-watermark
-      q.processAllAvailable()
-      assert(spark.table("dedup").count() == 2) // still deduped across batches
-    } finally q.stop()
-  }
-
-  test("watermarked stream-stream join matches its batch twin") {
-    implicit val sq = spark.sqlContext
-    val ev = Tables.events(spark, sfTiny)
-      .select($"user_id", $"ts", $"event_id", $"event_type", $"value")
-    val clicksB = ev.filter($"event_type" === "click")
-    val purchB = ev.filter($"event_type" === "purchase")
-    val batch = Streams.purchaseClickJoin(clicksB, purchB)
-      .select($"purchase_id", $"click_id").as[(Long, Long)].collect().toSet
-    assert(batch.nonEmpty)
-
-    val cs = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val ps = MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
-    val out = Streams.purchaseClickJoin(
-        cs.toDF().toDF("user_id", "ts", "event_id"),
-        ps.toDF().toDF("user_id", "ts", "event_id", "value"))
-      .writeStream.outputMode("append").format("memory").queryName("ssj").start()
-    try {
-      cs.addData(clicksB.select($"user_id", $"ts", $"event_id")
-        .as[(Long, java.sql.Timestamp, Long)].collect().toSeq)
-      ps.addData(purchB.select($"user_id", $"ts", $"event_id", $"value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSeq)
-      out.processAllAvailable()
-      val streamed = spark.table("ssj")
-        .select($"purchase_id", $"click_id").as[(Long, Long)].collect().toSet
-      assert(streamed == batch)
-    } finally out.stop()
-  }
+  private def startPipeline(incoming: String, sink: String, ck: String) =
+    Streams.pipelineStream(spark, batch1.schema, incoming, sink, ck,
+      KnowledgeBase.sampleModelKb(spark), KnowledgeBase.sampleRegexKb(spark),
+      KnowledgeBase.sampleRates(spark)).start()
 
   test("the full customs pipeline runs incrementally via foreachBatch") {
-    import graft.etl.KnowledgeBase
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe_stream").toString
     val incoming = s"$dir/in"; val sink = s"$dir/out"; val ck = s"$dir/ck"
     new java.io.File(incoming).mkdirs()
-    def factRow(id: String, desc: String) =
-      (id, desc, "MOKAC CO", 120000.0, 1.0, 20000.0, "2024/05/01", "84295200", "202405")
-    val cols = Seq("declaration number", "product description", "supplier",
-      "amount in usd", "qty", "weight in kg", "date", "hs code", "month")
-    val b1 = Seq(factRow("s1", "KOMATSU PC200-8 EXCAVATOR"),
-      factRow("s2", "MYSTERY DEVICE")).toDF(cols: _*)
-    val b2 = Seq(factRow("s3", "SANY EXCAVATOR SY365H GOOD")).toDF(cols: _*)
-    b1.write.mode("append").parquet(incoming)
-    val q = Streams.pipelineStream(spark, b1.schema, incoming, sink, ck,
-      KnowledgeBase.sampleModelKb(spark), KnowledgeBase.sampleRegexKb(spark),
-      KnowledgeBase.sampleRates(spark)).start()
+    batch1.write.mode("append").parquet(incoming)
+    val q = startPipeline(incoming, sink, ck)
     try {
       q.processAllAvailable()
       val first = spark.read.parquet(sink)
       assert(first.count() == 2)
-      b2.write.mode("append").parquet(incoming)
+      batch2.write.mode("append").parquet(incoming)
       q.processAllAvailable()
       val all = spark.read.parquet(sink)
       assert(all.count() == 3) // incremental: only the new batch appended
@@ -240,512 +68,31 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("cdc stream materializes versioned snapshots; latest version reflects all merges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
-    val changes = s"$dir/changes"; val snap = s"$dir/snap"; val ck = s"$dir/ck"
-    new java.io.File(changes).mkdirs()
-    val init = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "status", "price")
-    val b0 = Seq((1L, "u1", 11.0, 1L, 1L, "upsert"),
-      (3L, "c", 30.0, 1L, 2L, "upsert"))
-      .toDF("k", "status", "price", "ts", "seq", "op")
-    b0.coalesce(1).write.mode("append").parquet(changes)
-    val q = Streams.cdcStream(spark, b0.schema, changes, snap, ck, init, "k").start()
-    def version(v: Long) = spark.read.schema(init.schema).parquet(s"$snap/__v=$v")
-      .select($"k", $"status", $"price").as[(Long, String, Double)].collect().sortBy(_._1)
-    try {
-      q.processAllAvailable()
-      assert(version(0).toSeq == Seq((1L, "u1", 11.0), (2L, "b", 20.0), (3L, "c", 30.0)))
-      // second micro-batch: delete key 2, supersede key 3
-      Seq((2L, "x", 0.0, 2L, 1L, "delete"), (3L, "c2", 33.0, 2L, 2L, "upsert"))
-        .toDF("k", "status", "price", "ts", "seq", "op")
-        .coalesce(1).write.mode("append").parquet(changes)
-      q.processAllAvailable()
-      // version 1 builds on version 0: key 1 keeps batch-0's upsert,
-      // key 2 is deleted, key 3 carries batch-1's supersede
-      assert(version(1).toSeq == Seq((1L, "u1", 11.0), (3L, "c2", 33.0)))
-      // third micro-batch deletes EVERY remaining key: the empty version
-      // must still materialize (a vanished version would make batch 3
-      // merge against version 1 and resurrect the deleted keys)
-      Seq((1L, "x", 0.0, 3L, 1L, "delete"), (3L, "x", 0.0, 3L, 2L, "delete"))
-        .toDF("k", "status", "price", "ts", "seq", "op")
-        .coalesce(1).write.mode("append").parquet(changes)
-      q.processAllAvailable()
-      assert(version(2).isEmpty, "all-deleted batch should yield an empty snapshot")
-      // and a later upsert builds on the EMPTY state, not a stale one
-      Seq((9L, "new", 99.0, 4L, 1L, "upsert"))
-        .toDF("k", "status", "price", "ts", "seq", "op")
-        .coalesce(1).write.mode("append").parquet(changes)
-      q.processAllAvailable()
-      assert(version(3).toSeq == Seq((9L, "new", 99.0)))
-    } finally q.stop()
-  }
-
-  test("corpus ingest stream: quality-gates, self-dedupes, and drops cross-batch dups") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val in = s"$dir/in"; val corpus = s"$dir/corpus"; val ck = s"$dir/ck"
-    new java.io.File(in).mkdirs()
-    val good = "the quick brown fox jumps over the lazy dog again and " +
-      "again while the farmer watches from a quiet distant hill today"
-    val good2 = "a completely different long document about machinery and " +
-      "markets where the cranes and the excavators move heavy loads around " +
-      "every single day" // 22 tokens — clears the 20-token quality floor
-    val b0 = Seq((1L, good), (2L, "short"), (3L, good))
-      .toDF("doc_id", "text") // 2 fails quality (< 20 tokens); 3 = exact dup of 1
-    b0.coalesce(1).write.mode("append").parquet(in)
-    val q = Streams.corpusIngestStream(spark, b0.schema, in, corpus, ck).start()
-    try {
-      q.processAllAvailable()
-      val after0 = spark.read.parquet(corpus).select($"doc_id").as[Long].collect().toSet
-      assert(after0 == Set(1L), s"batch 0 kept $after0")
-      // batch 1: exact dup of corpus doc 1, novel good2
-      Seq((10L, good), (11L, good2)).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val after1 = spark.read.parquet(corpus).select($"doc_id").as[Long].collect().toSet
-      assert(after1 == Set(1L, 11L), s"batch 1 kept $after1")
-    } finally q.stop()
-  }
-
-  test("file-source history append stream lands monthly batches in the sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+  test("a replayed pipeline micro-batch overwrites its own partition, no duplicates") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_replay").toString
     val incoming = s"$dir/in"; val sink = s"$dir/out"; val ck = s"$dir/ck"
     new java.io.File(incoming).mkdirs()
-    val batch = graft.Tables.events(spark, sfTiny).select($"event_id", $"ts", $"value")
-    batch.limit(100).write.mode("append").parquet(incoming)
-    val q = Streams.historyAppendStream(spark, batch.schema, incoming, sink, ck).start()
+    batch1.write.mode("append").parquet(incoming)
+    val q = startPipeline(incoming, sink, ck)
     try {
       q.processAllAvailable()
-      assert(spark.read.parquet(sink).count() == 100)
-      batch.limit(150).write.mode("append").parquet(incoming)
+      batch2.write.mode("append").parquet(incoming)
       q.processAllAvailable()
-      assert(spark.read.parquet(sink).count() == 250) // incremental append
     } finally q.stop()
-  }
-
-  test("rate limiter flags match the batch trailing-window count") {
-    implicit val sq = spark.sqlContext
-    val win = 3600L * 1000000L
-    val max = 1
-    // exclude users with same-instant events: the batch RANGE frame counts
-    // both peers for both rows, the stream sees them sequentially — the
-    // operators agree everywhere else
-    val all = Tables.events(spark, sfTiny)
-      .select($"user_id", org.apache.spark.sql.functions.unix_micros($"ts").as("us"),
-        $"value")
-    val tied = all.groupBy($"user_id", $"us")
-      .count().filter($"count" > 1).select($"user_id").distinct()
-    val evDf = all.join(tied, Seq("user_id"), "left_anti")
-    val ev = evDf.select($"user_id", $"us").as[(Long, Long)]
-    val batchFlags = graft.ops.TimeSeries.trailing(
-        evDf.withColumn("ts", org.apache.spark.sql.functions
-          .timestamp_micros($"us")), "user_id", "ts", "value", win)
-      .select($"user_id", $"us", ($"n_win" <= max).as("allowed"))
-      .as[(Long, Long, Boolean)].collect().toSet
-    val stream = MemoryStream[(Long, Long)]
-    val q = Streams.rateLimitStream(stream.toDS(), win, max)
-      .toDF("user_id", "us", "allowed")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rate_limit").start()
+    // forget that batch 1 committed: as after a crash between the sink
+    // write and the commit, the restart must run batch 1 again
+    Seq("commits/1", "commits/.1.crc").foreach(f => new java.io.File(s"$ck/$f").delete())
+    assert(!new java.io.File(s"$ck/commits/1").exists())
+    val replay = startPipeline(incoming, sink, ck)
     try {
-      // deliver in event-time order so stream decisions mirror the batch op
-      stream.addData(ev.collect().toSeq.sortBy(_._2))
-      q.processAllAvailable()
-      val streamed = spark.table("rate_limit")
-        .as[(Long, Long, Boolean)].collect().toSet
-      assert(streamed == batchFlags)
-      assert(streamed.exists(!_._3), "fixture should contain violations")
-    } finally q.stop()
-  }
-
-  test("rate limiter state stays bounded under a flooding key") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, Long)]
-    val q = Streams.rateLimitStream(stream.toDS(), windowMicros = 1000L,
-        maxEvents = 2)
-      .toDF("user_id", "us", "allowed")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rate_flood").start()
-    try {
-      stream.addData((1L to 100L).map(i => (7L, i)))
-      q.processAllAvailable()
-      val rows = spark.table("rate_flood")
-        .as[(Long, Long, Boolean)].collect().sortBy(_._2)
-      // first 2 allowed, everything after is inside the window and over max
-      assert(rows.take(2).forall(_._3) && rows.drop(2).forall(!_._3))
-      // an event after the window expires is allowed again
-      stream.addData(Seq((7L, 100000L)))
-      q.processAllAvailable()
-      val late = spark.table("rate_flood").as[(Long, Long, Boolean)]
-        .collect().find(_._2 == 100000L).get
-      assert(late._3, "post-window event must be allowed (state pruned)")
-    } finally q.stop()
-  }
-
-  test("drift monitor stream: per-batch chi2 equals the batch operator") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
-    val in = s"$dir/in"; val alerts = s"$dir/alerts"; val ck = s"$dir/ck"
-    new java.io.File(in).mkdirs()
-    val ref = Seq("en", "en", "de", "fr").toDF("lang")
-    val b0 = Seq("en", "de").toDF("lang")               // mild shift
-    val b1 = Seq("de", "de", "de", "zz").toDF("lang")   // big shift + new cat
-    b0.coalesce(1).write.mode("append").parquet(in)
-    val q = Streams.driftMonitorStream(spark, b0.schema, in, alerts, ck,
-      ref, "lang").start()
-    try {
-      q.processAllAvailable()
-      b1.coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val out = spark.read.parquet(alerts)
-      def chi2Of(batch: org.apache.spark.sql.DataFrame): Double =
-        graft.ops.Drift.chiSquareDrift(ref, batch, "lang")
-          .select($"chi2").as[Double].head()
-      val streamed = out.select($"__batch_id", $"chi2").distinct()
-        .as[(Long, Double)].collect().toMap
-      assert(streamed.keySet == Set(0L, 1L))
-      assert(streamed(0L) == chi2Of(b0))
-      assert(streamed(1L) == chi2Of(b1))
-      assert(streamed(1L) > streamed(0L), "bigger shift, bigger chi2")
-      // the unseen category rides along with NULL contrib
-      assert(out.filter($"__batch_id" === 1 && $"category" === "zz" &&
-        $"contrib".isNull).count() == 1)
-    } finally q.stop()
-  }
-
-  test("segment dedup stream: scrubs corpus-so-far boilerplate per batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_segdedup").toString
-    val in = s"$dir/in"; val clean = s"$dir/clean"; val index = s"$dir/index"; val ck = s"$dir/ck"
-    new java.io.File(in).mkdirs()
-    val boiler = "b1 b2 b3 b4 b5 b6 b7 b8"          // shared 8-token segment
-    val uniq1 = "u1 u2 u3 u4 u5 u6 u7 u8"
-    val uniq2 = "w1 w2 w3 w4 w5 w6 w7 w8"
-    val fresh = "f1 f2 f3 f4 f5 f6 f7 f8"
-    // batch 0: the boilerplate segment occurs twice WITHIN the batch
-    val b0 = Seq((1L, s"$boiler $uniq1"), (2L, s"$boiler $uniq2")).toDF("doc_id", "text")
-    b0.coalesce(1).write.mode("append").parquet(in)
-    val q = Streams.segmentDedupStream(spark, b0.schema, in, clean, index, ck).start()
-    try {
-      q.processAllAvailable()
-      val after0 = spark.read.parquet(clean)
-        .select($"doc_id", $"clean_text").as[(Long, String)].collect().toMap
-      assert(after0 == Map(1L -> uniq1, 2L -> uniq2), s"batch 0: $after0")
-      // batch 1: uniq1 is now corpus boilerplate (1 prior + 1 here = 2);
-      // fresh survives; doc 1 is NOT retro-scrubbed
-      Seq((3L, s"$uniq1 $fresh")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val after1 = spark.read.parquet(clean)
-        .select($"doc_id", $"clean_text").as[(Long, String)].collect().toMap
-      assert(after1 == Map(1L -> uniq1, 2L -> uniq2, 3L -> fresh), s"batch 1: $after1")
-      // the index accumulated one count row per distinct segment per batch
-      val idx = spark.read.parquet(index).groupBy($"__batch_id").count()
-        .as[(Long, Long)].collect().toMap
-      assert(idx == Map(0L -> 3L, 1L -> 2L), s"index: $idx")
-    } finally q.stop()
-  }
-
-  test("ingest scrub stream: per-batch output equals the batch transform") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scrub").toString
-    val in = s"$dir/in"; val outd = s"$dir/scrubbed"; val ck = s"$dir/ck"
-    new java.io.File(in).mkdirs()
-    val docs = graft.Tables.documents(spark, sfTiny)
-    val bl = Seq("order fast", "slow slow")
-    val b0 = docs.filter($"doc_id" < 20)
-    val b1 = docs.filter($"doc_id" >= 20 && $"doc_id" < 40)
-    b0.coalesce(1).write.mode("append").parquet(in)
-    val q = Streams.ingestScrubStream(spark, b0.schema, in, outd, ck, bl).start()
-    try {
-      q.processAllAvailable()
-      b1.coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val streamed = spark.read.parquet(outd)
-        .select($"doc_id", $"keep", $"reason", $"fail_mask", $"clean_text")
-        .as[(Long, Boolean, String, Int, String)].collect().toSet
-      val batch = Streams.ingestScrub(docs.filter($"doc_id" < 40), bl)
-        .as[(Long, Boolean, String, Int, String)].collect().toSet
-      assert(streamed == batch)
-      assert(batch.exists(!_._2), "fixture must reject something")
-      assert(batch.exists(_._2), "fixture must keep something")
-    } finally q.stop()
-  }
-
-  test("score stream: per-batch classifier scores equal the batch scorer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_score").toString
-    val in = s"$dir/in"; val outd = s"$dir/scored"; val ck = s"$dir/ck"
-    new java.io.File(in).mkdirs()
-    val docs = graft.Tables.documents(spark, sfTiny)
-    val w = graft.ops.Classifier.logregFit(docs, "doc_id", "text",
-      col("lang") === "en", buckets = 64, iters = 2, rate = 0.02)
-    val b0 = docs.filter($"doc_id" < 20)
-    val b1 = docs.filter($"doc_id" >= 20 && $"doc_id" < 40)
-    b0.coalesce(1).write.mode("append").parquet(in)
-    val q = Streams.scoreStream(spark, b0.schema, in, outd, ck, w,
-      col("lang") === "en").start()
-    try {
-      q.processAllAvailable()
-      b1.coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val streamed = spark.read.parquet(outd)
-        .select($"doc_id", $"p", $"pred").as[(Long, Double, Boolean)]
-        .collect().toSet
-      val batch = graft.ops.Classifier.logregScore(
-          docs.filter($"doc_id" < 40), "doc_id", "text",
-          col("lang") === "en", w)
-        .select($"doc_id", $"p", $"pred").as[(Long, Double, Boolean)]
-        .collect().toSet
-      assert(streamed == batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  // ─── state-STORE growth evidence (the 100 TB claim is about state, not
-  // output): read stateOperators metrics off the progress events and pin
-  // rows == distinct keys under heavy key skew — a flooding key must not
-  // grow the store beyond its one row (whose payload rateLimitStream
-  // bounds at maxEvents timestamps by construction).
-
-  private def maxStateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
-    q.recentProgress.filter(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).max
-
-  test("rate limiter state-store rows == distinct keys under a skewed flood") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, Long)]
-    val q = Streams.rateLimitStream(stream.toDS(), windowMicros = 1000L,
-        maxEvents = 3)
-      .toDF("user_id", "us", "allowed")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rate_state_rows").start()
-    try {
-      // key 1 floods 5000 events; 49 keys send 2 each (99.0 % skew)
-      stream.addData((0 until 5000).map(i => (1L, i.toLong)) ++
-        (2L to 50L).flatMap(k => Seq((k, 0L), (k, 1L))))
-      q.processAllAvailable()
-      // second micro-batch: the flood continues — rows must not grow
-      stream.addData((0 until 2000).map(i => (1L, 10000L + i.toLong)))
-      q.processAllAvailable()
-      assert(spark.table("rate_state_rows").count() == 5000 + 49 * 2 + 2000)
-      val rows = maxStateRows(q)
-      assert(rows == 50L,
-        s"state rows must be one per distinct key (50), got $rows")
-    } finally q.stop()
-  }
-
-  test("funnel state-store rows == distinct users under a skewed flood") {
-    implicit val sq = spark.sqlContext
-    val stages = Seq("view", "cart", "purchase")
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-    def ts(ms: Long) = new java.sql.Timestamp(ms)
-    val q = Streams.funnelStream(stream.toDS(), stages)
-      .toDF("user_id", "stage_idx")
-      .writeStream.outputMode("update").format("memory")
-      .queryName("funnel_state_rows").start()
-    try {
-      // user 1 spams 3000 view events (only the first advances state);
-      // 19 quiet users convert through all three stages
-      stream.addData((0 until 3000).map(i => (1L, ts(i), "view")) ++
-        (2L to 20L).flatMap(u => Seq(
-          (u, ts(1L), "view"), (u, ts(2L), "cart"), (u, ts(3L), "purchase"))))
-      q.processAllAvailable()
-      stream.addData((0 until 1000).map(i => (1L, ts(10000L + i), "view")))
-      q.processAllAvailable()
-      val rows = maxStateRows(q)
-      assert(rows == 20L,
-        s"state rows must be one per distinct user (20), got $rows")
-      // and the spam advanced user 1 exactly once
-      val u1 = spark.table("funnel_state_rows").filter($"user_id" === 1)
-        .as[(Long, Int)].collect()
-      assert(u1.toSeq == Seq((1L, 0)))
-    } finally q.stop()
-  }
-
-  test("EWMA stream equals the batch ewmaFir row for row (in-order delivery)") {
-    implicit val sq = spark.sqlContext
-    val evDf = Tables.events(spark, sfTiny).limit(300)
-      .select($"user_id", org.apache.spark.sql.functions.unix_micros($"ts").as("us"),
-        $"event_id", $"value")
-    val batch = graft.ops.TimeSeries.ewmaFir(
-        evDf.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros($"us")),
-        "user_id", "ts", "event_id", "value", alpha = 0.3, taps = 8)
-      .select($"user_id", $"event_id", $"ewma")
-      .as[(Long, Long, Double)].collect().toSet
-    val stream = MemoryStream[(Long, Long, Long, Double)]
-    val q = Streams.ewmaStream(stream.toDS(), alpha = 0.3, taps = 8)
-      .toDF("user_id", "event_id", "ewma")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ewma_stream").start()
-    try {
-      val evs = evDf.as[(Long, Long, Long, Double)].collect().sortBy(e => (e._2, e._3))
-      // split across two micro-batches: state must carry the lags over
-      val (b1, b2) = evs.splitAt(evs.length / 2)
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      val streamed = spark.table("ewma_stream")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("MG stream: k-bounded single state row, textbook guarantee holds") {
-    implicit val sq = spark.sqlContext
-    // 300 'hot' + 60 spread across 12 cold terms, split over two batches
-    val feed = ((1 to 300).map(i => ("hot", i.toLong)) ++
-      (1 to 60).map(i => (s"cold${i % 12}", 300L + i))).sortBy(_._2)
-    val exact = feed.groupBy(_._1).map { case (t, xs) => t -> xs.size.toLong }
-    val stream = MemoryStream[(String, Long)]
-    val q = Streams.mgStream(stream.toDS(), k = 4)
-      .toDF("term", "cnt", "n")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mg_stream").start()
-    try {
-      val (b1, b2) = feed.splitAt(feed.length / 2)
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-      assert(maxStateRows(q) == 1L)
-      val fin = spark.table("mg_stream").where($"n" === feed.length)
-        .as[(String, Long, Long)].collect()
-      assert(fin.length <= 4)
-      val m = fin.map(r => r._1 -> r._2).toMap
-      val bound = feed.length / 4 // n/k
-      // survival: true frequency > n/k must be reported
-      assert(m.contains("hot"))
-      // count error within n/k of exact, and never an overcount
-      m.foreach { case (t, c) =>
-        assert(c <= exact(t) && exact(t) - c <= bound, s"$t: $c vs ${exact(t)}")
-      }
-    } finally q.stop()
-  }
-
-  test("SCD2 stream equals the batch build's open events across batches") {
-    implicit val sq = spark.sqlContext
-    val evDf = Tables.events(spark, sfTiny).limit(300)
-      .select($"user_id", org.apache.spark.sql.functions.unix_micros($"ts").as("us"),
-        $"event_id", $"event_type")
-    val batch = graft.ops.Cdc.scd2Build(
-        evDf.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros($"us")),
-        "user_id", "ts", "event_type", "event_id")
-      .select($"user_id",
-        org.apache.spark.sql.functions.unix_micros($"valid_from").as("us"),
-        $"event_type", $"version")
-      .as[(Long, Long, String, Long)].collect().toSet
-    val stream = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.scd2CurrentStream(stream.toDS())
-      .toDF("user_id", "us", "event_type", "version")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("scd2_stream").start()
-    try {
-      val evs = evDf.as[(Long, Long, Long, String)].collect().sortBy(e => (e._2, e._3))
-      val (b1, b2) = evs.splitAt(evs.length / 2)
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      val streamed = spark.table("scd2_stream")
-        .as[(Long, Long, String, Long)].collect().toSet
-      assert(streamed == batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("SCD2 stream state is one row per key under a re-emitting flood") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.scd2CurrentStream(stream.toDS())
-      .toDF("user_id", "us", "event_type", "version")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("scd2_flood").start()
-    try {
-      // 500 re-emits of the same value → ONE state row, ONE version row
-      stream.addData((1L to 500L).map(i => (9L, i, i, "same")))
-      q.processAllAvailable()
-      assert(maxStateRows(q) == 1L)
-      val rows = spark.table("scd2_flood")
-        .as[(Long, Long, String, Long)].collect().toSeq
-      assert(rows == Seq((9L, 1L, "same", 1L)))
-      // a real change still bumps the version
-      stream.addData(Seq((9L, 600L, 600L, "new")))
-      q.processAllAvailable()
-      assert(spark.table("scd2_flood").count() == 2)
-    } finally q.stop()
-  }
-
-  test("EWMA stream state stays bounded at taps values under a flooding key") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, Long, Long, Double)]
-    val q = Streams.ewmaStream(stream.toDS(), alpha = 0.5, taps = 4)
-      .toDF("user_id", "event_id", "ewma")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ewma_flood").start()
-    try {
-      stream.addData((1L to 500L).map(i => (9L, i, i, i.toDouble)))
-      q.processAllAvailable()
-      val rows = maxStateRows(q)
-      assert(rows == 1L, s"one key must hold ONE state row, got $rows")
-      // and the emitted tail only reflects the last 4 taps
-      val last = spark.table("ewma_flood").orderBy($"event_id".desc)
-        .as[(Long, Long, Double)].head()
-      val c = (0 until 4).map(k => 0.5 * math.pow(0.5, k))
-      val expect = BigDecimal((500 to 497 by -1).zip(c)
-          .map { case (v, w) => v * w }.sum / c.sum)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(last == ((9L, 500L, expect)))
-    } finally q.stop()
-  }
-
-  test("digest stream: running release digest equals the gated batch op") {
-    implicit val sq = spark.sqlContext
-    val docs = Tables.documents(spark, sfTiny)
-    val batch = graft.ops.TextStats.datasetDigest(docs, "source", "text")
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    // same normalized-text hash feed the batch op folds
-    val rows = docs.select(col("source"),
-        graft.ops.Dedup.baseHash(regexp_replace(
-          trim(lower(col("text"))), "\\s+", " ")).as("h"))
-      .as[(String, Long)].collect()
-    val stream = MemoryStream[(String, Long)]
-    val q = Streams.digestStream(stream.toDS())
-      .toDF("group", "n_docs", "digest")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("digest_stream").start()
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      assert(maxStateRows(q) <= batch.size.toLong)
-      val fin = spark.table("digest_stream")
-        .groupBy($"group").agg(max(struct($"n_docs", $"digest")).as("s"))
-        .select($"group", $"s.n_docs", $"s.digest")
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(fin == batch)
-    } finally q.stop()
-  }
-
-  test("zone-stats stream: final envelopes equal the batch aggregate") {
-    implicit val sq = spark.sqlContext
-    // lineitem-shaped (zone, value) rows — the write-time file-stats feed
-    val rows = Tables.lineitem(spark, sfTiny)
-      .select((col("l_orderkey") / lit(64)).cast("long").as("z"),
-        col("l_quantity").cast("double").as("v"))
-      .as[(Long, Double)].collect()
-    val batch = rows.groupBy(_._1).map { case (z, xs) =>
-      z -> ((xs.map(_._2).min, xs.map(_._2).max, xs.length.toLong)) }
-    val stream = MemoryStream[(Long, Double)]
-    val q = Streams.zoneStatsStream(stream.toDS())
-      .toDF("zone", "mn", "mx", "n")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("zone_stats").start()
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      // state stays one row per zone even across batches
-      assert(maxStateRows(q) <= batch.size.toLong)
-      // latest emission per zone == the batch envelope
-      val fin = spark.table("zone_stats")
-        .groupBy($"zone").agg(max(struct($"n", $"mn", $"mx")).as("s"))
-        .select($"zone", $"s.mn", $"s.mx", $"s.n")
-        .as[(Long, Double, Double, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(fin == batch)
-    } finally q.stop()
+      replay.processAllAvailable()
+      assert(replay.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == 1),
+        "the restart should have re-run batch 1")
+    } finally replay.stop()
+    val all = spark.read.parquet(sink)
+    assert(all.count() == 3)
+    assert(all.select($"`declaration number`").distinct().count() == 3)
+    val batch1Dirs = new java.io.File(sink).list().filter(_.startsWith("__batch_id=1"))
+    assert(batch1Dirs.toSeq == Seq("__batch_id=1"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   * tree, so filters push to the scan and all dimension joins broadcast.
   * The two knowledge-base stages (2: model KB, 7: regex KB) collect their
   * KB at plan time and match it with literal expressions, at any KB size.
+  * `run` / `runCrane` collect both KBs and the rate table on every call,
+  * but analyze the plan once per KB version (`CompiledPipeline`): a batch
+  * is bound to the plans analyzed for equal KB rows, SQL conf, fact schema
+  * and rate-table schema, so a monthly batch does not analyze the 13
+  * stages again. A grown KB compiles once more; new rates do not.
   * Shuffles: the two window aggregates, backward tagging over (brand, type)
   * and the outlier median over (brand, model) — everything else is
   * map-side. A window puts a whole group in one task, so a heavy-hitter
@@ -87,14 +92,23 @@ object Pipeline {
   /** Stage 2 (J1+J2, py:61-115): brand containment match (first in KB
     * order), then model containment match (longest), remark provenance.
     *
-    * The KB is collected once at plan time and the whole match compiles
-    * to codegen'd array expressions (Matching §expr): no join, no window,
+    * The KB is collected at plan time and the whole match compiles to
+    * codegen'd array expressions (Matching §expr): no join, no window,
     * the fact table is never shuffled. Collecting is the same bound a
     * broadcast join puts on the KB, which it also gathers on the driver
-    * first. */
-  def matchKnowledgeBase(df: DataFrame, modelKbRaw: DataFrame): DataFrame = {
-    val kb = KnowledgeBase.prepareModelKb(modelKbRaw)
-      .select("brand", "model", "model_ref", "capacity", "type", "hp").collect()
+    * first. `run` collects the KB on every call, but runs this stage (and
+    * analyzes its plan) only when the KB rows differ from those of a plan
+    * it already holds. */
+  def matchKnowledgeBase(df: DataFrame, modelKbRaw: DataFrame): DataFrame =
+    matchKbRows(df, modelKbRows(modelKbRaw))
+
+  /** The model KB as stage 2 matches it: `prepareModelKb`'s rows. */
+  private[etl] def modelKbRows(modelKbRaw: DataFrame): Seq[Row] =
+    KnowledgeBase.prepareModelKb(modelKbRaw)
+      .select("brand", "model", "model_ref", "capacity", "type", "hp").collect().toSeq
+
+  /** Stage 2 over the rows of `modelKbRows`. */
+  private[etl] def matchKbRows(df: DataFrame, kb: Seq[Row]): DataFrame = {
     val brandOrder: Seq[String] = kb.map(_.getString(0)).toSeq.distinct
     val modelsByBrand: Map[String, Seq[String]] =
       kb.groupBy(_.getString(0)).map { case (b, rows) => b -> rows.map(_.getString(2)).toSeq }
@@ -160,18 +174,28 @@ object Pipeline {
     * rows; brand-scoped when the brand is known, global otherwise; longest
     * findall match wins; capacity decoded per starting_point.
     *
-    * The regex KB is collected once at plan time (as for stage 2): every
+    * The regex KB is collected at plan time (as for stage 2): every
     * pattern becomes a literal regex inside one fused expression
     * (`RegexMatch.literalRegexBest`), which returns the winner's ordinal —
     * zero joins, zero shuffles. Brand, category, starting point and
     * capacity regex are looked up by that ordinal in literal arrays, so
     * the plan grows by one array element per pattern and the pass is the
-    * same at any KB size. Only a matched row runs its capacity regex. */
+    * same at any KB size. Only a matched row runs its capacity regex.
+    * Within `run`, as for stage 2, the plan is analyzed once per regex KB
+    * version: a grown KB is a new version. */
   def regexPass(df: DataFrame, regexKb: DataFrame,
-      compat: CompatFlags = CompatFlags.intent): DataFrame = {
-    val rows = regexKb.select("brand", "model_regex", "capacity_regex", "category", "starting_point")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+      compat: CompatFlags = CompatFlags.intent): DataFrame =
+    regexPassRows(df, regexKbRows(regexKb), compat)
+
+  /** The regex KB as stage 7 matches it. */
+  private[etl] def regexKbRows(regexKb: DataFrame): Seq[Row] =
+    regexKb.select("brand", "model_regex", "capacity_regex", "category", "starting_point")
+      .collect().toSeq
+
+  /** Stage 7 over the rows of `regexKbRows`. */
+  private[etl] def regexPassRows(df: DataFrame, kb: Seq[Row], compat: CompatFlags): DataFrame = {
+    val rows = kb.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getInt(4)))
       .sortBy { case (_, pat, _, _, _) => (-pat.length, pat) } // longer patterns first (O2)
     if (rows.isEmpty) return df // no regex KB → stage is a no-op
     val todoCond = col("remark").isin(Remark.brandNoModel, Remark.noMatch)
@@ -252,7 +276,9 @@ object Pipeline {
       "type interval" -> Enrich.fixedBuckets(basis))
   }
 
-  /** Stage 12 (J5, py:320-340): USD→CNY per (year, month) of `date`. */
+  /** Stage 12 (J5, py:320-340): USD→CNY per (year, month) of `date`.
+    * `run` rejects a rate table that repeats a month
+    * (`Rates.requireOneRatePerMonth`): the join would repeat its rows. */
   def convertCurrency(df: DataFrame, rates: DataFrame): DataFrame =
     Rates.convert(df, "date", rates,
       Seq("price in usd" -> "price in cny", "amount in usd" -> "amount in cny"))
@@ -276,38 +302,41 @@ object Pipeline {
     * wide stringy schema ~10× cheaper than `persist`'s columnar
     * re-encoding. On a cluster this becomes `checkpoint` into durable
     * storage (reliable under executor loss; localCheckpoint is not). */
-  private def materialize(df: DataFrame): DataFrame =
+  private[etl] def materialize(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false)
 
-  /** Shared 13-stage chain; `intervals` is the only stage that differs
-    * between the excavator (E1) and crane (E2) entry points. */
-  private def runStages(fact: DataFrame, modelKb: DataFrame, regexKb: DataFrame,
-      rates: DataFrame, intervals: DataFrame => DataFrame,
-      compat: CompatFlags): DataFrame =
+  /** Stages 1-2, the chain before the cut. */
+  private[etl] def matchBlock(fact: DataFrame, modelKb: Seq[Row]): DataFrame =
     fact.transform(prepare)
       .withColumn("datasource", lit("pipeline"))
-      .transform(matchKnowledgeBase(_, modelKb))
+      .transform(matchKbRows(_, modelKb))
       // supplier_norm exists only for brand matching — drop it BEFORE the
       // cut so it isn't materialized
-      .transform(_.drop("supplier_norm"))
-      .transform(materialize)             // codegen cut: match block
-      .transform(dropIrrelevant)
+      .drop("supplier_norm")
+
+  /** Stages 3-13, the chain after the cut; the interval stage is the only
+    * one that differs between the excavator (E1) and crane (E2) modes. */
+  private[etl] def enrich(matched: DataFrame, regexKb: Seq[Row], rates: DataFrame,
+      mode: CompiledPipeline.Mode): DataFrame =
+    matched.transform(dropIrrelevant)
       .transform(applyTypeRules)
       .transform(markUsedNew)
       .transform(markParts)
-      .transform(regexPass(_, regexKb, compat))
+      .transform(regexPassRows(_, regexKb, mode.compat))
       .transform(searchCapacity)
       .transform(Lookups.refineCraneType) // B5: >300T crawler → lattice boom
       .transform(backwardTag)
       .transform(markOutliers)
-      .transform(intervals)
+      .transform(df => if (mode.crane) markIntervalsCrane(df, mode.loadInterval)
+        else markIntervals(df, mode.loadInterval))
       .transform(convertCurrency(_, rates))
       .transform(finalize)
 
   /** The whole E1 (excavator) composition. */
   def run(fact: DataFrame, modelKb: DataFrame, regexKb: DataFrame,
       rates: DataFrame, compat: CompatFlags = CompatFlags.intent): DataFrame =
-    runStages(fact, modelKb, regexKb, rates, markIntervals(_), compat)
+    CompiledPipeline.run(fact, modelKb, regexKb, rates,
+      CompiledPipeline.Mode(crane = false, loadInterval = 10, compat))
 
   /** Crane-mode intervals (B1 crane branch): capacity ONLY — no unit-
     * weight fallback — with `<wT` + w-wide bands; the fixed working-
@@ -324,8 +353,8 @@ object Pipeline {
       rates: DataFrame, translations: Option[DataFrame] = None,
       loadInterval: Int = 50,
       compat: CompatFlags = CompatFlags.intent): DataFrame = {
-    val out = runStages(fact, modelKb, regexKb, rates,
-      markIntervalsCrane(_, loadInterval), compat)
+    val out = CompiledPipeline.run(fact, modelKb, regexKb, rates,
+      CompiledPipeline.Mode(crane = true, loadInterval, compat))
     translations.map(t => Lookups.translateLabels(out, "type", t, "type_translated"))
       .getOrElse(out)
   }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exchange-rate conversion (SURVEY.md §2.4 J5; reference `convert_usd_to_cny`
@@ -29,5 +29,16 @@ object Rates {
       val v = col(src) * col("__rate")
       dst -> roundTo.map(round(v, _)).getOrElse(v)
     }: _*)
+  }
+
+  /** Throw if the collected rate table `rows` gives some (year, month) more
+    * than one rate: `convert`'s left join would return that month's fact
+    * rows once per rate. The error names every repeated month. */
+  def requireOneRatePerMonth(rows: Seq[Row]): Unit = {
+    val repeated = rows.map(r => (r.getAs[Any]("__ry"), r.getAs[Any]("__rm")))
+      .filter { case (y, m) => y != null && m != null }
+      .groupBy(identity).collect { case ((y, m), rs) if rs.size > 1 => s"($y, $m) × ${rs.size}" }
+    require(repeated.isEmpty,
+      s"rate table repeats (year, month): ${repeated.toSeq.sorted.mkString(", ")}")
   }
 }

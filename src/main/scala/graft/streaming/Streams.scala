@@ -35,7 +35,10 @@ object Streams {
     * the batch (the reference's semantics are per-batch-with-history, not
     * per-row), so each micro-batch runs the full batch pipeline — the
     * standard pattern for promoting a complex batch flow without rewriting
-    * it.
+    * it. Every micro-batch has the same schema and, until a KB changes,
+    * the same KBs, so `run` binds it to the plans it analyzed for the
+    * first one: a micro-batch pays its scan, cut and write, not the
+    * pipeline's analysis.
     *
     * foreachBatch alone is only at-least-once (a micro-batch that fails
     * after a partial write is replayed), so the write is made IDEMPOTENT:

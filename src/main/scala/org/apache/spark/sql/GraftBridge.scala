@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the private[sql] Column↔Expression converters — the
   * supported way to expose a custom Catalyst `Expression` as a `Column`
@@ -13,7 +14,18 @@ object GraftBridge {
     * specs evaluate a SUBTREE of an analyzed plan (e.g. a window
     * operator's input projected to its partition keys) to measure its
     * actual cardinality, which no static name list can know. */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over `plan` taken as analyzed: the analyzer returns a plan
+    * marked analyzed as it is, so `plan` is neither resolved nor checked
+    * again. For a plan put together from analyzed parts
+    * (`graft.etl.CompiledPipeline`). A node copied by a transform shares
+    * the mutable dataset-id set of the node it was copied from; the root's
+    * is dropped, so the DataFrame does not add its id to the original's. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.unsetTagValue(classic.Dataset.DATASET_ID_TAG)
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
 }

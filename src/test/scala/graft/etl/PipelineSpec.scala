@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -213,6 +214,17 @@ class PipelineSpec extends SparkSpec {
         assert(cuts.size == 1)
       }
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a rate table that repeats a month is rejected; with one rate a month no row repeats") {
+    val (kb, rx) = (KnowledgeBase.sampleModelKb(spark), KnowledgeBase.sampleRegexKb(spark))
+    // the left join to the rates would return each May row twice
+    val twice = Rates.rateTable(spark, Seq((2024, 4, 7.0), (2024, 5, 7.1), (2024, 5, 7.2)))
+    val e = intercept[IllegalArgumentException](Pipeline.run(fact, kb, rx, twice))
+    assert(e.getMessage.contains("(2024, 5) × 2"), e.getMessage)
+    val ids = (df: DataFrame) => df.select($"`declaration number`").as[String].collect().sorted.toSeq
+    val filtered = fact.transform(Pipeline.prepare).transform(Pipeline.dropIrrelevant)
+    assert(ids(Pipeline.run(fact, kb, rx, KnowledgeBase.sampleRates(spark))) == ids(filtered))
   }
 
   test("output schema carries the §1.3 enrichment columns") {

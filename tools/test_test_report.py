@@ -4,7 +4,8 @@
 Writes two suites covering every outcome (pass, failure, error, skip),
 including an escaped test name, and asserts the sorted per-testcase lines
 and the totals line. Also checks that an empty report directory yields
-only a zero totals line.
+only a zero totals line, and that a suite no test source declares is
+STALE and left out of the totals.
 Run: python3 tools/test_test_report.py
 """
 import os
@@ -53,6 +54,29 @@ def test_one_line_per_testcase_sorted_with_totals():
     ], got
 
 
+def test_undeclared_suite_is_stale_and_left_out():
+    with tempfile.TemporaryDirectory() as d:
+        reports, src = os.path.join(d, "reports"), os.path.join(d, "src", "graft", "ops")
+        os.makedirs(reports)
+        os.makedirs(src)
+        for name, xml in (("TEST-graft.ops.ASpec.xml", SUITE_A),
+                          ("TEST-graft.BSpec.xml", SUITE_B)):
+            with open(os.path.join(reports, name), "w") as f:
+                f.write(xml)
+        # ASpec is declared in a file of another name; BSpec is gone
+        with open(os.path.join(src, "Specs.scala"), "w") as f:
+            f.write("package graft.ops\n\nclass ASpec extends AnyFunSuite\n")
+        got = report_lines(reports, os.path.join(d, "src"))
+    assert got == [
+        "ERROR graft.ops.ASpec :: throws",
+        "FAIL graft.ops.ASpec :: asserts wrong",
+        "STALE graft.BSpec :: a: first",
+        "STALE graft.BSpec :: canceled by assume",
+        "ok graft.ops.ASpec :: passes & stays green",
+        "total 3: ok 1, FAIL 1, ERROR 1, SKIP 0; STALE 2 left out",
+    ], got
+
+
 def test_empty_dir_gives_zero_totals():
     with tempfile.TemporaryDirectory() as d:
         assert report_lines(d) == ["total 0: ok 0, FAIL 0, ERROR 0, SKIP 0"]
@@ -60,6 +84,7 @@ def test_empty_dir_gives_zero_totals():
 
 if __name__ == "__main__":
     tests = (test_one_line_per_testcase_sorted_with_totals,
+             test_undeclared_suite_is_stale_and_left_out,
              test_empty_dir_gives_zero_totals)
     for t in tests:
         t()

@@ -102,9 +102,9 @@ object Matching {
     * already present are overwritten on the re-matched rows only.
     *
     * The match scans description2 AND supplier_norm; pipeline output drops
-    * supplier_norm at the first lineage cut (runStages), so when the column
-    * is missing it is re-derived here from the raw supplier column —
-    * deterministic, identical to Pipeline.prepare's derivation. */
+    * supplier_norm right after the match block (`Pipeline.chain`), so
+    * when the column is missing it is re-derived here from the raw supplier
+    * column — deterministic, identical to Pipeline.prepare's derivation. */
   def rematchIndividual(df: DataFrame, cond: Column,
       modelKb: DataFrame): DataFrame = {
     val hadSupplierNorm = df.columns.contains("supplier_norm")

@@ -1,8 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.Barrier
 
 /** The customs-analytics pipeline (SURVEY.md §3 E1): the reference's
   * notebook cells 4→83 re-expressed as one lazy DataFrame lineage.
@@ -18,11 +20,10 @@ import org.apache.spark.sql.functions._
   * tree, so filters push to the scan and all dimension joins broadcast.
   * The two knowledge-base stages (2: model KB, 7: regex KB) collect their
   * KB at plan time and match it with literal expressions, at any KB size.
-  * `run` / `runCrane` collect both KBs and the rate table on every call,
-  * but analyze the plan once per KB version (`CompiledPipeline`): a batch
-  * is bound to the plans analyzed for equal KB rows, SQL conf, fact schema
-  * and rate-table schema, so a monthly batch does not analyze the 13
-  * stages again. A grown KB compiles once more; new rates do not.
+  * `run` / `runCrane` analyze the 13 stages once per KB version
+  * (`CompiledPipeline`), not once per batch. Their output is one lazy plan
+  * that stores no block: a second action runs the whole chain again, so a
+  * caller that needs two actions caches it.
   * Shuffles: the two window aggregates, backward tagging over (brand, type)
   * and the outlier median over (brand, model) — everything else is
   * map-side. A window puts a whole group in one task, so a heavy-hitter
@@ -50,11 +51,10 @@ object Pipeline {
 
   private def c(name: String): Column = col(s"`$name`")
 
-  /** Stage 1 (cells 5-13): stable row id, normalized text columns, numeric
-    * coercions, low-amount filter, derived unit metrics. */
+  /** Stage 1 (cells 5-13): normalized text columns, numeric coercions,
+    * low-amount filter, derived unit metrics. */
   def prepare(df: DataFrame): DataFrame = {
     val typed = Project(df)(
-      "__row_id" -> monotonically_increasing_id(),
       // lenient like pd.to_datetime: accept ISO or slash dates, null otherwise
       "date" -> coalesce(
         try_to_timestamp(c("date")),
@@ -96,9 +96,7 @@ object Pipeline {
     * codegen'd array expressions (Matching §expr): no join, no window,
     * the fact table is never shuffled. Collecting is the same bound a
     * broadcast join puts on the KB, which it also gathers on the driver
-    * first. `run` collects the KB on every call, but runs this stage (and
-    * analyzes its plan) only when the KB rows differ from those of a plan
-    * it already holds. */
+    * first. */
   def matchKnowledgeBase(df: DataFrame, modelKbRaw: DataFrame): DataFrame =
     matchKbRows(df, modelKbRows(modelKbRaw))
 
@@ -180,9 +178,7 @@ object Pipeline {
     * zero joins, zero shuffles. Brand, category, starting point and
     * capacity regex are looked up by that ordinal in literal arrays, so
     * the plan grows by one array element per pattern and the pass is the
-    * same at any KB size. Only a matched row runs its capacity regex.
-    * Within `run`, as for stage 2, the plan is analyzed once per regex KB
-    * version: a grown KB is a new version. */
+    * same at any KB size. Only a matched row runs its capacity regex. */
   def regexPass(df: DataFrame, regexKb: DataFrame,
       compat: CompatFlags = CompatFlags.intent): DataFrame =
     regexPassRows(df, regexKbRows(regexKb), compat)
@@ -286,39 +282,22 @@ object Pipeline {
   /** Stage 13 (F5 + P6, cells 57/60): model whitespace cleanup + sentinel
     * rendering for export (capacity stays a nullable double internally). */
   def finalize(df: DataFrame): DataFrame =
-    Project(df, "supplier_norm", "__row_id")(
+    Project(df, "supplier_norm")(
       "model" -> Normalize.stripSpaces(col("model")),
       "datasource" -> coalesce(c("datasource"), lit("pipeline")))
 
-  /** Cut the lineage after the match block, the pipeline's one cut: it
-    * keeps the optimizer from pushing later filters back through the
-    * expensive normalize and match projections, and splits the plan each
-    * action analyses and optimizes in two. The later stages need no cut,
-    * as none reads its input twice (the window aggregates do not branch).
-    * The cut is lazy (`eager = false`) and the match block has no
-    * exchange, so building the pipeline starts no job.
-    *
-    * `localCheckpoint` stores raw rows in the block manager — for this
-    * wide stringy schema ~10× cheaper than `persist`'s columnar
-    * re-encoding. On a cluster this becomes `checkpoint` into durable
-    * storage (reliable under executor loss; localCheckpoint is not). */
-  private[etl] def materialize(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
-
-  /** Stages 1-2, the chain before the cut. */
-  private[etl] def matchBlock(fact: DataFrame, modelKb: Seq[Row]): DataFrame =
+  /** The 13 stages; the interval stage is the only one that differs between
+    * the excavator (E1) and crane (E2) modes. The barrier after the match
+    * block keeps stage 3's filter above it: pushed into the scan, the filter
+    * would compute `description2` a second time. */
+  private[etl] def chain(fact: DataFrame, modelKb: Seq[Row], regexKb: Seq[Row], rates: DataFrame,
+      mode: CompiledPipeline.Mode): DataFrame =
     fact.transform(prepare)
       .withColumn("datasource", lit("pipeline"))
       .transform(matchKbRows(_, modelKb))
-      // supplier_norm exists only for brand matching — drop it BEFORE the
-      // cut so it isn't materialized
-      .drop("supplier_norm")
-
-  /** Stages 3-13, the chain after the cut; the interval stage is the only
-    * one that differs between the excavator (E1) and crane (E2) modes. */
-  private[etl] def enrich(matched: DataFrame, regexKb: Seq[Row], rates: DataFrame,
-      mode: CompiledPipeline.Mode): DataFrame =
-    matched.transform(dropIrrelevant)
+      .drop("supplier_norm") // it exists only for brand matching
+      .transform(df => GraftBridge.ofRows(df.sparkSession, Barrier(df.queryExecution.analyzed)))
+      .transform(dropIrrelevant)
       .transform(applyTypeRules)
       .transform(markUsedNew)
       .transform(markParts)
@@ -332,7 +311,8 @@ object Pipeline {
       .transform(convertCurrency(_, rates))
       .transform(finalize)
 
-  /** The whole E1 (excavator) composition. */
+  /** The whole E1 (excavator) composition, as one lazy plan: a caller that
+    * needs two actions on it caches it. */
   def run(fact: DataFrame, modelKb: DataFrame, regexKb: DataFrame,
       rates: DataFrame, compat: CompatFlags = CompatFlags.intent): DataFrame =
     CompiledPipeline.run(fact, modelKb, regexKb, rates,
@@ -348,7 +328,8 @@ object Pipeline {
 
   /** E2 (crane) entry point (SURVEY §3; reference cells 37/51-52/73):
     * the same 13 stages with crane interval rules and an optional EN↔CN
-    * type-label translation merge (J8). `translations`: (key, translated). */
+    * type-label translation merge (J8). `translations`: (key, translated).
+    * Like `run`, one lazy plan: a caller that needs two actions caches it. */
   def runCrane(fact: DataFrame, modelKb: DataFrame, regexKb: DataFrame,
       rates: DataFrame, translations: Option[DataFrame] = None,
       loadInterval: Int = 50,

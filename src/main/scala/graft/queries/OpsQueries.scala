@@ -2352,7 +2352,7 @@ object OpsQueries {
     // ─── K2 rematchIndividual oracle-gated ──────────────────────────────
     // Match with a KB missing SANY, then re-match ONLY the 'No match' rows
     // against the full KB. supplier_norm is dropped before the rematch
-    // (exactly what runStages does to pipeline output), so this also gates
+    // (as `Pipeline.chain` drops it from pipeline output), so this also gates
     // rematchIndividual's supplier_norm re-derivation path.
     "q66_rematch_individual" -> Q(
       (s, dir) => {

@@ -37,8 +37,8 @@ object Streams {
     * standard pattern for promoting a complex batch flow without rewriting
     * it. Every micro-batch has the same schema and, until a KB changes,
     * the same KBs, so `run` binds it to the plans it analyzed for the
-    * first one: a micro-batch pays its scan, cut and write, not the
-    * pipeline's analysis.
+    * first one: a micro-batch pays its scan, its one pass through the
+    * chain and its write, not the pipeline's analysis.
     *
     * foreachBatch alone is only at-least-once (a micro-batch that fails
     * after a partial write is replayed), so the write is made IDEMPOTENT:

@@ -19,12 +19,10 @@ object GraftBridge {
 
   /** A DataFrame over `plan` taken as analyzed: the analyzer returns a plan
     * marked analyzed as it is, so `plan` is neither resolved nor checked
-    * again. For a plan put together from analyzed parts
-    * (`graft.etl.CompiledPipeline`). A node copied by a transform shares
-    * the mutable dataset-id set of the node it was copied from; the root's
-    * is dropped, so the DataFrame does not add its id to the original's. */
+    * again. For a plan put together from analyzed parts under a new root
+    * (`graft.etl.CompiledPipeline`): a root copied by a transform would
+    * share the mutable dataset-id set of the node it was copied from. */
   def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    plan.unsetTagValue(classic.Dataset.DATASET_ID_TAG)
     plan.setAnalyzed()
     ofRows(spark, plan)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.plans.Barrier
 
 /** `Pipeline.run` / `runCrane` bind each batch to plans analyzed once per
   * KB version (`CompiledPipeline`). These specs pin what the memo key must
@@ -41,13 +42,12 @@ class CompiledPipelineSpec extends SparkSpec {
   private def rkb = KnowledgeBase.sampleRegexKb(spark)
   private def rates = KnowledgeBase.sampleRates(spark)
 
-  /** The 13 stages from their public functions, cut where `Pipeline` cuts. */
+  /** The 13 stages from their public functions, as one plain chain. */
   private def reference(fact: DataFrame): DataFrame =
     fact.transform(Pipeline.prepare)
       .withColumn("datasource", lit("pipeline"))
       .transform(Pipeline.matchKnowledgeBase(_, kb))
       .drop("supplier_norm")
-      .localCheckpoint(eager = false)
       .transform(Pipeline.dropIrrelevant)
       .transform(Pipeline.applyTypeRules)
       .transform(Pipeline.markUsedNew)
@@ -153,5 +153,16 @@ class CompiledPipelineSpec extends SparkSpec {
     def cny(r: DataFrame) = Pipeline.run(fact, kb, rkb, r).filter(id("r1"))
       .select("amount in cny").as[Double].head()
     assert(cny(doubled) == 2 * cny(rates))
+  }
+
+  test("misses install the barrier strategy on their session once") {
+    // patterns no other test uses, so each run compiles
+    for (i <- 1 to 2) {
+      val grown = (KnowledgeBase.sampleRegexKbRows :+
+          ((s"MISS${i}BRAND", s"MISS$i\\d{7}", s"MISS$i(\\d)", "EXCAVATOR", 0)))
+        .toDF("brand", "model_regex", "capacity_regex", "category", "starting_point")
+      same(Pipeline.run(fact, kb, grown, rates), reference(fact))
+    }
+    assert(spark.experimental.extraStrategies.count(_ == Barrier.PlanAsChild) == 1)
   }
 }

@@ -2,9 +2,12 @@ package graft.etl
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.{MultiContainsFirst, PreProcessExpr}
+import graft.plans.Barrier
 
 /** End-to-end pipeline test on a customs-shaped fixture (FIXTURES.md A1):
   * each row exercises one matching path of SURVEY.md §3 E2. */
@@ -38,6 +41,15 @@ class PipelineSpec extends SparkSpec {
     factRow("r10", "KOMATSU SPARE PARTS SKD", "MOKAC CO", 60000, 1, 3000, "2024/05/10"))
     .toDF("declaration number", "product description", "supplier", "amount in usd",
       "qty", "weight in kg", "date", "hs code", "month")
+
+  /** `fact` read back from parquet: over a local relation the optimizer
+    * folds the stages below the barrier into new local rows, and a plan
+    * equal to `out`'s is answered from its cache. */
+  private lazy val scanned = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_fact").resolve("f").toString
+    fact.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
 
   lazy val out = Pipeline.run(fact,
     KnowledgeBase.sampleModelKb(spark), KnowledgeBase.sampleRegexKb(spark),
@@ -185,7 +197,10 @@ class PipelineSpec extends SparkSpec {
     assert(!ids.contains("r11"))
   }
 
-  test("run and runCrane start no job before an action and cut the lineage once") {
+  private def samples = (KnowledgeBase.sampleModelKb(spark), KnowledgeBase.sampleRegexKb(spark),
+    KnowledgeBase.sampleRates(spark))
+
+  test("run and runCrane start no job before an action and fence the lineage once") {
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
@@ -194,12 +209,12 @@ class PipelineSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      val (kb, rx, rates) = (KnowledgeBase.sampleModelKb(spark),
-        KnowledgeBase.sampleRegexKb(spark), KnowledgeBase.sampleRates(spark))
+      val (kb, rx, rates) = samples
       val translations = Seq(("CRAWLER CRANE", "履带起重机")).toDF("key", "translated")
+      val batch = scanned // written and read before construction: its jobs are not construction's
       sc.setJobGroup("construct", "pipeline construction")
-      val built = try Seq(Pipeline.run(fact, kb, rx, rates),
-          Pipeline.runCrane(fact, kb, rx, rates, Some(translations)))
+      val built = try Seq(Pipeline.run(batch, kb, rx, rates),
+          Pipeline.runCrane(batch, kb, rx, rates, Some(translations)))
         finally sc.clearJobGroup()
       // listener events arrive in order: once this job is seen, every job
       // started during construction has been seen too
@@ -210,10 +225,37 @@ class PipelineSpec extends SparkSpec {
       assert(groups.contains("fence"))
       assert(!groups.contains("construct"), s"jobs started: ${groups.toArray.toSeq}")
       built.foreach { df =>
-        val cuts = df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }
-        assert(cuts.size == 1)
+        val plan = df.queryExecution.optimizedPlan
+        assert(plan.collect { case r: LogicalRDD => r }.isEmpty)
+        assert(plan.collect { case b: Barrier => b }.size == 1)
       }
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("the barrier keeps stage 3's filter above the match block") {
+    val (kb, rx, rates) = samples
+    val qe = Pipeline.run(scanned, kb, rx, rates).queryExecution
+    def preProcesses(p: LogicalPlan) =
+      p.flatMap(_.expressions.flatMap(_.collect { case e: PreProcessExpr => e })).size
+    // pushed into the scan, the filter would evaluate description2 a second time
+    assert(preProcesses(qe.optimizedPlan) == preProcesses(qe.analyzed))
+    val irrelevant = qe.optimizedPlan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[MultiContainsFirst]) => f
+    }
+    assert(irrelevant.size == 1)
+    assert(irrelevant.head.child.isInstanceOf[Barrier], irrelevant.head.child.nodeName)
+  }
+
+  test("run and runCrane leave no persistent RDD behind their action") {
+    val (kb, rx, rates) = samples
+    val sc = spark.sparkContext
+    for (build <- Seq(() => Pipeline.run(scanned, kb, rx, rates),
+        () => Pipeline.runCrane(scanned, kb, rx, rates))) {
+      // ids, not the count: the cleaner may unpersist an earlier suite's RDDs meanwhile
+      val before = sc.getPersistentRDDs.keySet
+      assert(build().count() > 0)
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    }
   }
 
   test("a rate table that repeats a month is rejected; with one rate a month no row repeats") {
